@@ -39,7 +39,7 @@ def build_app(sf_dir: str, spark=None, cache_results: bool = True):
     controller = Controller(
         board,
         widgets=[
-            DatesRangeWidget("Order date", "day"),
+            DatesRangeWidget("Order date", "order_day"),
             StringFilterWidget("Region", "region"),
         ],
     )

@@ -8,29 +8,33 @@ records through exec-compiled closures into a hash-agg dict
 and Tungsten own predicate pushdown, column pruning, partial aggregation,
 whole-stage codegen, shuffle and spill.
 
-The reference's cross-query slice cache with cost-based reuse
-(/root/reference/bacon/cutting.py:137-202,235-522) survives as an
-engine-level LRU of persisted result DataFrames with three strategies:
+The reference's cross-query slice cache (exact reuse, drill-down and
+roll-up from earlier results, /root/reference/bacon/cutting.py:235-522)
+is ONE engine-level LRU of ``CACHE_SIZE`` entries keyed by the query's
+exact output signature. An entry holds the persisted result frame of a
+Spark-planned slice, the collected rows of any slice, or both. ONE rule,
+``CuttingBoard._derive``, decides whether an earlier result answers a
+new query: the query's values and axes are subsets of the parent's, the
+parent's filters are a subset of the query's, and every added filter
+names a parent axis (filtering finished rows by a group-key value is
+filtering the input by that label). Dropping an axis re-aggregates only
+when no ``eq`` filter pins it; re-aggregation needs every value's
+accumulator to be ``reaggregatable`` (the partial/final contract), the
+projection needs nothing.
 
-* exact reuse (same axes/filters, value superset) — pointer share, cost 1
-  (ReuseCachedSlice, /root/reference/bacon/cutting.py:235-271);
-* drill pushdown (new eq-filter on an axis of a cached slice) — filter the
-  cached *result*, cost 2 (DrillOnFirstAxis, /root/reference/bacon/
-  cutting.py:274-333 — Catalyst prunes the tiny cached plan);
-* roll-up (coarser axes over same filters, re-aggregatable measures) —
-  re-aggregate the cached result, cost 10 (ManipulateSlice,
-  /root/reference/bacon/cutting.py:336-522) — sound exactly because every
-  accumulator keeps the partial/final contract.
+The same rule serves three stores:
 
-Layered OVER the persisted-DataFrame cache is the WARM navigation path
-(round 7): collected slice rows are memoized driver-side, and exact
-repeats, scalar/membership-op drills on cached axes (PY_FILTER_OPS
-twins, reference null semantics), and rollups through the accumulators'
-``py_merge`` twins are answered with ZERO Spark jobs — the reference's
-in-memory slice walk at its native cost, which is what closes the
-small-table interactive gap against a preloaded Python loop
-(BENCH_reference_r07.json nav section; fuzz-verified against cold
-recomputes in tests/test_engine.py).
+* entries holding rows — answered driver-side with ZERO Spark jobs
+  (``PY_FILTER_OPS`` twins, the accumulators' ``py_merge``): the
+  reference's in-memory slice walk at its native cost (fuzz-verified
+  against cold recomputes in tests/test_engine.py);
+* entries holding only a frame — answered on the persisted frame
+  (``FILTER_OPS``, ``acc.merge``), never re-scanning the base table;
+* registered lattice grains (operators/lattice.py).
+
+Matches are ranked rows before frames, then projection before
+re-aggregation. A first hit on a small board may instead fold the eager
+snapshot driver-side (``_local_cold``); its result lands in the same LRU.
 
 Scale note (100 TB): cube *results* are small (bounded by group count) even
 when inputs are huge, so persisting results is cheap; the wins come from
@@ -98,23 +102,13 @@ def _freeze_value(v):
     return v
 
 
-def _cache_key(query: CubeQuery):
-    return (
-        query.axes,
-        frozenset((n, op, _freeze_value(v)) for n, op, v in query.filters),
-    )
+def _frozen_filters(filters) -> frozenset:
+    return frozenset((n, op, _freeze_value(v)) for n, op, v in filters)
 
 
 def _memo_key(query: CubeQuery):
-    """Full output signature for the driver-side rows memo: unlike
-    ``_cache_key`` (plan reuse: axes+filters, value superset allowed) the
-    memo is keyed on the exact projected/ordered output."""
-    return (
-        query.axes,
-        frozenset((n, op, _freeze_value(v)) for n, op, v in query.filters),
-        query.values,
-        query.order,
-    )
+    """The slice cache's one key: the query's exact output signature."""
+    return (query.axes, _frozen_filters(query.filters), query.values, query.order)
 
 
 class CuttingBoard:
@@ -147,18 +141,12 @@ class CuttingBoard:
         # immune to source churn. Default off: for plain batch boards,
         # recompute-on-invalidation is the CORRECT freshness behavior.
         self.snapshot_cache = snapshot_cache
-        # key -> (query, result_df); LRU promote-on-hit like the reference
-        # deque rotation (/root/reference/bacon/cutting.py:181-202)
+        # the slice cache: _memo_key -> (query, frame, schema, rows), LRU
+        # with promote-on-hit like the reference deque rotation
+        # (/root/reference/bacon/cutting.py:181-202). *frame* is the
+        # persisted result of a Spark-planned slice (None otherwise);
+        # *schema*/*rows* the collected result (None until collected).
         self._cache: OrderedDict = OrderedDict()
-        # the WARM navigation path: _memo_key -> (query, schema, rows) of
-        # COLLECTED slice results. Cube results are bounded by group
-        # count, so materialized rows are cheap to hold, and a repeat /
-        # drill / roll-up served from them costs no Spark job at all —
-        # the reference's in-memory slice reuse
-        # (/root/reference/bacon/cutting.py:235-522) at driver scope,
-        # layered OVER the persisted-DataFrame cache (which still serves
-        # anything the driver-side fold can't express exactly).
-        self._rows_memo: OrderedDict = OrderedDict()
         self.local_hits = 0  # diagnostics: queries answered without a job
         # decisions-log scope for THIS board (operators/decisions.py):
         # concurrent boards interleave in the process-global log, so the
@@ -198,22 +186,27 @@ class CuttingBoard:
 
     # --- public API -------------------------------------------------------
     def slice(self, query: CubeQuery) -> Slice:
+        hits = self._matches(query) if self.cache_results else []
+        for cq, _frame, schema, rows, added, reagg in hits:
+            if rows is not None:
+                made = self._serve_rows(query, cq, schema, rows, added, reagg)
+                if made is not None:
+                    return made
         if self.cache_results:
-            local = self._local_slice(query)
-            if local is not None:
-                return local  # _local_slice/_local_cold recorded the route
-        # the cold-fold vs Spark-plan choice (VERDICT r11 next #6): no
-        # driver-side form could answer exactly, so this query takes a
-        # Spark plan (which may itself serve from a lattice — the
-        # "lattice" decision records that separately)
+            made = self._local_cold(query)
+            if made is not None:
+                return made
+        # no driver-side form answers exactly: this query takes a Spark
+        # plan, over a cached frame, a lattice grain or the base table
+        df, served_from = self._plan(query, hits)
         decisions.record(
             "cold_fold",
             "spark",
             context=self.decisions_context,
+            served_from=served_from,
             axes=query.axes,
             values=query.values,
         )
-        df = self._plan(query)
         return Slice(
             self.cubedef, query, df, board=self if self.cache_results else None
         )
@@ -246,23 +239,176 @@ class CuttingBoard:
 
     def clear_cache(self) -> None:
         with self._lock:
-            for _, cached_df in self._cache.values():
-                cached_df.unpersist()
+            for _q, frame, _s, _r in self._cache.values():
+                if frame is not None:
+                    frame.unpersist()
             self._cache.clear()
-            self._rows_memo.clear()
 
-    # --- driver-side warm path ---------------------------------------------
+    # --- the slice cache ---------------------------------------------------
+    def _store(self, query: CubeQuery, frame=None, schema=None, rows=None) -> None:
+        """Insert or update *query*'s entry as most recently used: a new
+        frame replaces (and unpersists) an older one, a missing frame or
+        missing rows keep the entry's. Evicted frames are unpersisted."""
+        key = _memo_key(query)
+        with self._lock:
+            old = self._cache.get(key)
+            if old is not None:
+                if frame is None:
+                    frame = old[1]
+                elif old[1] is not None and old[1] is not frame:
+                    old[1].unpersist()
+                if rows is None:
+                    schema, rows = old[2], old[3]
+            self._cache[key] = (query, frame, schema, rows)
+            self._cache.move_to_end(key)
+            while len(self._cache) > self.CACHE_SIZE:
+                _, (_q, evicted, _s, _r) = self._cache.popitem(last=False)
+                if evicted is not None:
+                    evicted.unpersist()
+
     def _memoize_rows(self, query: CubeQuery, schema, rows) -> None:
         """Called by Slice.collect(): keep the materialized result for
         warm navigation. Bounded per entry (MEMO_MAX_ROWS) and in entry
         count (CACHE_SIZE, LRU)."""
-        if len(rows) > self.MEMO_MAX_ROWS:
-            return
+        if len(rows) <= self.MEMO_MAX_ROWS:
+            self._store(query, schema=schema, rows=list(rows))
+
+    def _snapshot_frames(self) -> None:
+        """Switch to snapshot caching and pin every cached frame as a
+        localCheckpoint (see ``snapshot_cache``)."""
         with self._lock:
-            self._rows_memo[_memo_key(query)] = (query, schema, list(rows))
-            self._rows_memo.move_to_end(_memo_key(query))
-            while len(self._rows_memo) > self.CACHE_SIZE:
-                self._rows_memo.popitem(last=False)
+            self.snapshot_cache = True
+            for key, (cq, frame, schema, rows) in list(self._cache.items()):
+                if frame is not None:
+                    self._cache[key] = (cq, frame.localCheckpoint(eager=True), schema, rows)
+                    frame.unpersist()
+
+    def _derive(self, query: CubeQuery, parent_axes, parent_filters, parent_values):
+        """The one reuse rule: can a finished result at (*parent_axes*,
+        *parent_filters*, *parent_values*) answer *query* exactly?
+
+        It can when the query's values and axes are subsets of the
+        parent's, the parent's filters are a subset of the query's, and
+        every added filter names a parent axis — filtering finished rows
+        by a group-key value is filtering the input by that label, for any
+        accumulator. Dropping an axis that an ``eq`` filter pins leaves
+        one finished row per output group (a projection); dropping any
+        other axis merges several, which needs every value's accumulator
+        to be reaggregatable. Returns ``(added filters, reaggregate)`` or
+        None."""
+        if not (
+            set(query.values) <= set(parent_values)
+            and set(query.axes) <= set(parent_axes)
+        ):
+            return None
+        have = _frozen_filters(parent_filters)
+        if not have <= _frozen_filters(query.filters):
+            return None
+        added = [
+            (n, op, v)
+            for n, op, v in query.filters
+            if (n, op, _freeze_value(v)) not in have
+        ]
+        if any(n not in parent_axes or op not in FILTER_OPS for n, op, _v in added):
+            return None
+        pinned = {n for n, op, _v in query.filters if op == "eq"}
+        reagg = any(a not in query.axes and a not in pinned for a in parent_axes)
+        if reagg and not all(
+            self.cubedef.get_value(v).acc.reaggregatable for v in query.values
+        ):
+            return None
+        return added, reagg
+
+    def _matches(self, query: CubeQuery) -> list:
+        """Every cache entry that answers *query* by ``_derive``, as
+        ``(query, frame, schema, rows, added, reaggregate)``, best first:
+        rows before frames, then projection before re-aggregation, most
+        recently used first among equals. An exact hit is promoted, so it
+        leads its rank; one holding rows is the best match there is, and
+        the walk is skipped."""
+        key = _memo_key(query)
+        with self._lock:
+            exact = self._cache.get(key)
+            if exact is not None:
+                self._cache.move_to_end(key)
+                if exact[3] is not None:
+                    return [(*exact, [], False)]
+            entries = list(self._cache.values())
+        hits = []
+        for cq, frame, schema, rows in reversed(entries):
+            m = self._derive(query, cq.axes, cq.filters, cq.values)
+            if m is not None:
+                hits.append((cq, frame, schema, rows, *m))
+        hits.sort(key=lambda h: (h[3] is None, h[5]))
+        return hits
+
+    def _serve_rows(self, query: CubeQuery, cq: CubeQuery, schema, rows, added, reagg):
+        """Answer *query* from a cached entry's rows driver-side — no
+        Spark job. Returns None when a piece lacks an exact Python twin
+        (an added op without a ``PY_FILTER_OPS`` twin, a value without
+        ``py_merge``); the next match or the Spark plan answers then.
+
+        At 100 TB the cached results are still group-count-bounded, so
+        this path's cost is unchanged by data scale."""
+        if _memo_key(query) == _memo_key(cq):
+            self.local_hits += 1
+            decisions.record(
+                "cold_fold",
+                "local_warm",
+                context=self.decisions_context,
+                kind="exact_repeat",
+                rows=len(rows),
+            )
+            return self._local_made(query, schema, rows)
+        if reagg and any(
+            self.cubedef.get_value(v).acc.py_merge is None for v in query.values
+        ):
+            return None
+        fields = {f.name: f for f in schema.fields}
+        try:
+            # same compile-time op-vs-type check as _local_cold: a
+            # set-algebra drill on a non-array axis goes to Spark (which
+            # rejects it) instead of the twin iterating a scalar cell.
+            # Kept as a LIST: two filters on one axis must BOTH apply.
+            drill = [
+                (n, compile_py_filter(op, v, fields[n].dataType)) for n, op, v in added
+            ]
+        except KeyError:
+            return None
+        if drill:
+            rows = [r for r in rows if all(f(r[a]) for a, f in drill)]
+        out = self._py_reaggregate(query, rows) if reagg else [
+            {c: r[c] for c in (*query.axes, *query.values)} for r in rows
+        ]
+        self._py_order(query, out)
+        self.local_hits += 1
+        decisions.record(
+            "cold_fold",
+            "local_warm",
+            context=self.decisions_context,
+            kind="derived",
+            drilled=bool(drill),
+            reaggregated=reagg,
+            rows=len(out),
+        )
+        from pyspark.sql.types import StructType
+
+        out_schema = StructType([fields[c] for c in (*query.axes, *query.values)])
+        made = self._local_made(
+            query, out_schema, [tuple(d[c] for c in out_schema.names) for d in out]
+        )
+        # cache the derived result too: further drills chain off it
+        self._memoize_rows(query, out_schema, made._rows)
+        return made
+
+    def _serve_frame(self, df: DataFrame, query: CubeQuery, added, reagg) -> DataFrame:
+        """Answer *query* on a finished frame (a cached slice or a
+        lattice grain) by the ``_derive`` match (*added*, *reagg*)."""
+        for n, op, v in added:
+            df = df.filter(FILTER_OPS[op](F.col(n), v))
+        if reagg:
+            return self._reaggregate(df, query)
+        return df.select(*query.axes, *query.values)
 
     def _build_snapshot(self, cap: int) -> None:
         """Extract every label value and (py-foldable) measure input from
@@ -414,122 +560,6 @@ class CuttingBoard:
         )
         return made
 
-    def _local_slice(self, query: CubeQuery):
-        """Serve *query* entirely driver-side from memoized slice rows —
-        no Spark job. Exact repeats return their memoized rows; drills
-        (eq filters on cached extra axes) filter rows in Python; axis
-        drops re-aggregate via the accumulators' ``py_merge`` twins.
-        Returns None when no memoized parent can answer exactly; the
-        planner then falls through to the persisted-DataFrame cache.
-
-        This is the reference's slice-reuse machinery
-        (/root/reference/bacon/cutting.py:235-522) applied at its native
-        cost: O(cached result size) Python, zero scheduling. At 100 TB
-        the cached results are still group-count-bounded, so the warm
-        path's cost is unchanged by data scale."""
-        if any(op not in FILTER_OPS for _, op, _v in query.filters):
-            return None
-        with self._lock:
-            entries = list(self._rows_memo.items())
-            exact = self._rows_memo.get(_memo_key(query))
-        if exact is not None:
-            _, schema, rows = exact
-            self.local_hits += 1
-            decisions.record(
-                "cold_fold",
-                "local_warm",
-                context=self.decisions_context,
-                kind="exact_repeat",
-                rows=len(rows),
-            )
-            return self._local_made(query, schema, rows)
-        wanted_vals = set(query.values)
-        fq = frozenset((n, op, _freeze_value(v)) for n, op, v in query.filters)
-        for _key, (pq, schema, rows) in entries:
-            if not wanted_vals <= set(pq.values):
-                continue
-            if not set(query.axes) <= set(pq.axes):
-                continue
-            fc = frozenset((n, op, _freeze_value(v)) for n, op, v in pq.filters)
-            if not fc <= fq:
-                continue
-            # every ADDED filter must be a scalar/membership op on a
-            # cached axis — filtering finished rows by a GROUP KEY value
-            # is exactly filtering the input by that label (the same
-            # soundness argument as the lattice's filter drills), for
-    \
-            # ANY accumulator when the axis is kept. Ops without a
-            # Python twin (regex, set algebra) fall through to the
-            # Spark planner. Kept as a LIST: two filters on ONE axis
-            # must BOTH apply (a dict silently dropped one — caught by
-            # the randomized navigation fuzz test)
-            drill: list = []
-            ok = True
-            memo_fields = {f.name: f for f in schema.fields}
-            for n, op, v in query.filters:
-                if (n, op, _freeze_value(v)) in fc:
-                    continue
-                if op in PY_FILTER_OPS and n in pq.axes:
-                    # same compile-time op-vs-type check as _local_cold:
-                    # a set-algebra drill on a non-array axis falls
-                    # through to Spark (which rejects it) instead of the
-                    # twin iterating a scalar cell (ADVICE r10)
-                    try:
-                        drill.append(
-                            (n, compile_py_filter(op, v, memo_fields[n].dataType))
-                        )
-                    except KeyError:
-                        ok = False
-                        break
-                else:
-                    ok = False
-                    break
-            if not ok:
-                continue
-            extra_axes = [a for a in pq.axes if a not in query.axes]
-            # dropping axes changes grain -> driver-side re-aggregation
-            # (eq-pinned dropped axes leave singleton groups; range/ne
-            # filtered or unpinned ones merge several finished rows per
-            # output group)
-            needs_reagg = bool(extra_axes)
-            if needs_reagg and not all(
-                self.cubedef.get_value(v).acc.reaggregatable
-                and self.cubedef.get_value(v).acc.py_merge is not None
-                for v in query.values
-            ):
-                continue
-            if drill:
-                rows = [
-                    r for r in rows if all(f(r[a]) for a, f in drill)
-                ]
-            out = self._py_reaggregate(query, rows) if needs_reagg else [
-                {c: r[c] for c in (*query.axes, *query.values)} for r in rows
-            ]
-            self._py_order(query, out)
-            self.local_hits += 1
-            decisions.record(
-                "cold_fold",
-                "local_warm",
-                context=self.decisions_context,
-                kind="derived",
-                drilled=bool(drill),
-                reaggregated=needs_reagg,
-                rows=len(out),
-            )
-            from pyspark.sql.types import StructType
-
-            fields = {f.name: f for f in schema.fields}
-            out_schema = StructType(
-                [fields[c] for c in (*query.axes, *query.values)]
-            )
-            made = self._local_made(
-                query, out_schema, [tuple(d[c] for c in out_schema.names) for d in out]
-            )
-            # memoize the derived result too: further drills chain off it
-            self._memoize_rows(query, out_schema, made._rows)
-            return made
-        return self._local_cold(query)
-
     def _local_made(self, query: CubeQuery, schema, rows) -> Slice:
         """A Slice over already-materialized rows: collect()/renderers
         use them directly (zero Spark work), while to_df() lazily wraps
@@ -616,15 +646,14 @@ class CuttingBoard:
             self._snap_rows = None
             self._build_snapshot(self._snap_cap)
         with self._lock:
-            # memoized rows describe the pre-refresh data: all stale
-            self._rows_memo.clear()
-            entries = list(self._cache.items())
-            for key, (cq, cdf) in entries:
-                if not all(
+            # collected rows describe the pre-refresh data: all stale
+            for key, (cq, cdf, _s, _r) in list(self._cache.items()):
+                if cdf is None or not all(
                     self.cubedef.get_value(v).acc.reaggregatable for v in cq.values
                 ):
                     del self._cache[key]
-                    cdf.unpersist()
+                    if cdf is not None:
+                        cdf.unpersist()
                     continue
                 delta_slice = self._aggregate_frame(cq, delta_df)
                 # snapshot the merge (localCheckpoint = compute now, forget
@@ -635,50 +664,32 @@ class CuttingBoard:
                 merged = self._reaggregate(
                     cdf.unionByName(delta_slice), cq
                 ).localCheckpoint(eager=True)
-                self._cache[key] = (cq, merged)
+                self._cache[key] = (cq, merged, None, None)
                 cdf.unpersist()
 
     # --- planning ----------------------------------------------------------
-    def _plan(self, query: CubeQuery) -> DataFrame:
-        """Choose the min-cost plan over cached slices, else compute.
-
-        Cost model mirrors the reference: 1 = pointer share, 2 = drill
-        filter, 10 = re-aggregation
-        (/root/reference/bacon/cutting.py:146-167,262,313-314,378-381).
-        Registered lattices answer covered queries at cost ~1."""
+    def _plan(self, query: CubeQuery, hits) -> tuple[DataFrame, str]:
+        """The Spark plan for *query* and what it reads: a registered
+        lattice, the best cached frame among the ``_matches`` *hits*, or
+        (computed, persisted and cached) the base table."""
         lat_df = self._lattice_plan(query)
         if lat_df is not None:
-            return self._order(lat_df, query)
-        if not self.cache_results:
-            return self._order(self._aggregate(query), query)
-
-        plans = []
-        with self._lock:
-            entries = list(self._cache.items())
-        for key, (cq, cdf) in entries:
-            p = self._reuse_plan(query, cq, cdf)
-            if p is not None:
-                plans.append((p[0], key, p[1]))
-                if p[0] == 1:
-                    break
-        if plans:
-            cost, key, make = min(plans, key=lambda t: t[0])
-            with self._lock:
-                if key in self._cache:
-                    self._cache.move_to_end(key)  # promote on hit
-            return self._order(make(), query)
-
+            return self._order(lat_df, query), "lattice"
+        for cq, frame, _schema, _rows, added, reagg in hits:
+            if frame is not None:
+                key = _memo_key(cq)
+                with self._lock:
+                    if key in self._cache:
+                        self._cache.move_to_end(key)  # promote on hit
+                return self._order(self._serve_frame(frame, query, added, reagg), query), "frame"
         result = self._aggregate(query)
-        if self.snapshot_cache:
-            result = result.localCheckpoint(eager=True)
-        else:
-            result = result.persist(StorageLevel.MEMORY_AND_DISK)
-        with self._lock:
-            self._cache[_cache_key(query)] = (query, result)
-            while len(self._cache) > self.CACHE_SIZE:
-                _, (_, old) = self._cache.popitem(last=False)
-                old.unpersist()
-        return self._order(result, query)
+        if self.cache_results:
+            if self.snapshot_cache:
+                result = result.localCheckpoint(eager=True)
+            else:
+                result = result.persist(StorageLevel.MEMORY_AND_DISK)
+            self._store(query, frame=result)
+        return self._order(result, query), "base"
 
     def _lattice_plan(self, query: CubeQuery) -> DataFrame | None:
         """Serve from a registered lattice when it covers the query.
@@ -686,19 +697,15 @@ class CuttingBoard:
         Unfiltered queries read the grouping set at exactly query.axes.
         ANY row-level filter on lattice axes drills INTO the lattice —
         eq/in, ranges (gt/ge/lt/le), ne/ni, regex, set algebra: read the
-        grouping set at grain (query.axes ∪ filter axes), apply the
-        filters to the axis VALUES (reference null semantics via
-        FILTER_OPS — sound because the lattice stores label values, the
-        same column the scan path filters), and project. An eq filter
-        pins a single value of its axis, so the projection down to
-        query.axes is one-to-one over finished values — exact for any
-        accumulator. Any other op on an axis that is then dropped leaves
-        several finished rows per output group (e.g. a date-range drill
-        summed into totals), so that path merges finished values and is
-        gated on every value being reaggregatable. Cost is a grouping_id
-        filter plus an axis-value scan bound over the materialized
-        lattice (partition pruning on _gid, min/max skipping on axis
-        values, when the lattice is written out that way)."""
+        grouping set at grain (query.axes ∪ filter axes) and answer from
+        it by the slice cache's ``_derive`` rule: filters apply to the axis
+        VALUES (reference null semantics via FILTER_OPS — sound because
+        the lattice stores label values, the same column the scan path
+        filters), and dropping an axis that no eq filter pins merges
+        finished values, gated on every value being reaggregatable. Cost
+        is a grouping_id filter plus an axis-value scan bound over the
+        materialized lattice (partition pruning on _gid, min/max skipping
+        on axis values, when the lattice is written out that way)."""
         fil = query.filters
 
         def rescan(reason: str):
@@ -720,8 +727,6 @@ class CuttingBoard:
             return rescan("unsupported_filter_op")
         fnames = {n for n, _, _ in fil}
         wanted = set(query.axes) | fnames
-        dropped = fnames - set(query.axes)
-        needs_reagg = any(op != "eq" and n in dropped for n, op, _ in fil)
         miss = "not_covered"
         for lat in self._lattices:
             if not (
@@ -744,79 +749,30 @@ class CuttingBoard:
                     values=query.values,
                 )
                 return srv(tuple(query.axes), tuple(query.values), fil, FILTER_OPS)
-            if needs_reagg and not self._reaggregatable(query, needed=True):
+            grain = tuple(a for a in lat.axes if a in wanted)
+            m = self._derive(query, grain, (), lat.values)
+            if m is None:
                 miss = "reagg_gate"
                 continue
-            grain = tuple(a for a in lat.axes if a in wanted)
-            df = lat.slice_df(grain)
-            for n, op, v in fil:
-                df = df.filter(FILTER_OPS[op](F.col(n), v))
             decisions.record(
                 "lattice",
                 "serve",
                 context=self.decisions_context,
                 level="finished",
                 grain=grain,
-                reaggregated=needs_reagg,
+                reaggregated=m[1],
                 axes=query.axes,
                 values=query.values,
             )
-            if needs_reagg:
-                return self._reaggregate(df, query)
-            return df.select(*query.axes, *query.values)
+            return self._serve_frame(lat.slice_df(grain), query, *m)
         return rescan(miss)
-
-    def _reuse_plan(self, query: CubeQuery, cached_q: CubeQuery, cached_df: DataFrame):
-        """Return (cost, thunk) if the cached slice can answer *query*."""
-        wanted_vals = set(query.values)
-        if not wanted_vals <= set(cached_q.values):
-            return None
-        fq = frozenset((n, op, _freeze_value(v)) for n, op, v in query.filters)
-        fc = frozenset((n, op, _freeze_value(v)) for n, op, v in cached_q.filters)
-
-        # exact: same axes + same filters (+ value superset) -> share.
-        # Project to the QUERY's columns: the cached frame may carry a
-        # value superset / different value order, and serving it raw
-        # violates the output contract (found by the navigation fuzz —
-        # a subset query got the parent's extra measure columns).
-        if query.axes == cached_q.axes and fq == fc:
-            return 1, lambda: cached_df.select(*query.axes, *query.values)
-
-        # drill: cached axes = query axes + extra axes, and the query adds
-        # eq filters on exactly those extra axes -> filter cached RESULT
-        extra_filters = fq - fc
-        if fc <= fq and set(cached_q.axes) >= set(query.axes):
-            extra_axes = [a for a in cached_q.axes if a not in query.axes]
-            drill = {n: v for n, op, v in extra_filters if op == "eq"}
-            if len(extra_filters) == len(drill) and set(drill) == set(extra_axes):
-                if not self._reaggregatable(query, needed=bool(extra_axes)):
-                    return None
-
-                def make_drill():
-                    df = cached_df
-                    for a, v in drill.items():
-                        df = df.filter(F.col(a).isNull() if v is None else F.col(a) == F.lit(v))
-                    return self._reaggregate(df, query)
-
-                cost = 2 if not extra_axes else 10
-                # dropping the drilled axes changes grain -> re-aggregate
-                return cost, make_drill
-
-        # roll-up: same filters, query axes subset of cached axes
-        if fq == fc and set(query.axes) < set(cached_q.axes):
-            if self._reaggregatable(query, needed=True):
-                return 10, lambda: self._reaggregate(cached_df, query)
-        return None
-
-    def _reaggregatable(self, query: CubeQuery, needed: bool) -> bool:
-        if not needed:
-            return True
-        return all(self.cubedef.get_value(v).acc.reaggregatable for v in query.values)
 
     def _reaggregate(self, df: DataFrame, query: CubeQuery) -> DataFrame:
         aggs = [
             self.cubedef.get_value(v).acc.merge(F.col(v)).alias(v) for v in query.values
         ]
+        if not aggs:
+            return df.select(*query.axes).distinct()
         if query.axes:
             return df.groupBy(*[F.col(a) for a in query.axes]).agg(*aggs)
         return df.agg(*aggs)

@@ -154,7 +154,7 @@ FILTER_OPS = {
 
 # --- driver-side twins (the warm navigation path) ---------------------------
 # Python evaluations of the ops above, over a single already-materialized
-# axis VALUE — used by engine._local_slice to drill cached slice rows and
+# axis VALUE — used by engine.CuttingBoard._serve_rows to drill cached rows and
 # by the cold snapshot fold, without a Spark job. Each twin reproduces
 # its Column form's null semantics exactly (SQL three-valued logic: a
 # null compare filters the row out unless the op's reference semantics

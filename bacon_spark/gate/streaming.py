@@ -694,6 +694,27 @@ def q75_streaming_dedup_groups(spark, sf_dir):
     return spark.table("q75_stream")
 
 
+def _max_real_ts(spark, staged: str) -> dt.datetime:
+    """The sentinel-exclusion bound of a staged stream input: its max REAL
+    event time (sentinel rows excluded), as a UTC-aware datetime.
+
+    Read from the staged input's stats sidecar (r14): warmed at staging
+    time, so this is a metadata read, where an inline agg re-scanned the
+    full staged corpus for one scalar on every run. The value is the
+    identical exact aggregate (pinned in tests/test_sketch.py) and
+    self-heals by scanning on a cold sidecar. Aware, because ``F.lit``
+    converts a naive datetime through the driver's OS timezone."""
+    from ..errors import DataError
+    from ..operators.scale import max_event_time_stats
+
+    max_us = max_event_time_stats(spark, staged, "ts", exclude_type="sent")["max_us"]
+    if max_us is None:
+        raise DataError(f"staged stream input {staged} holds no non-sentinel events")
+    return dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc) + dt.timedelta(
+        microseconds=max_us
+    )
+
+
 def _stage_q85(spark, sf_dir):
     """Full fixture + one far-future sentinel event (its own session,
     filtered out by the query): ONE sentinel, TWO triggers — batch 0
@@ -770,18 +791,7 @@ def q85_streaming_session(spark, sf_dir):
     )
 
     d = _stage_q85(spark, sf_dir)
-    # max REAL ts (sentinel excluded) from the staged input's stats
-    # sidecar (r14): warmed at staging time, so this is a metadata read
-    # — the inline agg re-scanned the full staged corpus for one scalar
-    # on every run. Value is the identical exact aggregate (pinned in
-    # tests/test_scale_ops.py); self-heals by scanning on a cold sidecar.
-    from ..operators.scale import max_event_time_stats
-
-    hi = dt.datetime(1970, 1, 1) + dt.timedelta(
-        microseconds=max_event_time_stats(spark, d, "ts", exclude_type="sent")[
-            "max_us"
-        ]
-    )
+    hi = _max_real_ts(spark, d)
     stream = (
         spark.readStream.schema(
             "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -928,14 +938,7 @@ def q99_watermark_late_drop(spark, sf_dir):
         "value double, props string"
     )
     d = _stage_q99(spark, sf_dir)
-    # max REAL ts via the staged input's stats sidecar (r14, see q85)
-    from ..operators.scale import max_event_time_stats
-
-    hi = dt.datetime(1970, 1, 1) + dt.timedelta(
-        microseconds=max_event_time_stats(spark, d, "ts", exclude_type="sent")[
-            "max_us"
-        ]
-    )
+    hi = _max_real_ts(spark, d)
     stream = (
         spark.readStream.schema(sschema).option("maxFilesPerTrigger", 1).parquet(d)
     )

@@ -284,23 +284,27 @@ def sales_fact_for(
     )
 
 
+def _label_exprs(obj) -> tuple:
+    """The source expressions a label or measure reads: its ``_expr``,
+    plus the ``_base`` column a date-hierarchy label truncates."""
+    return getattr(obj, "_expr", None), getattr(obj, "_base", None)
+
+
 def fact_for_cube(spark: SparkSession, sf_dir: str, cubedef, query) -> DataFrame:
     """Build the minimal fact view for a specific query: collect every
     expression the query references (axes, values incl. hidden, filters)
     and cull unreferenced dimension joins."""
     exprs = []
     for a in query.axes:
-        exprs.append(getattr(cubedef.get_label(a), "_expr", None))
+        exprs.extend(_label_exprs(cubedef.get_label(a)))
     for v in query.values:
         m = cubedef.get_value(v)
-        exprs.append(getattr(m, "_expr", None))
+        exprs.extend(_label_exprs(m))
         acc = m.acc
         for attr in ("num", "den", "label_expr"):
-            e = getattr(acc, attr, None)
-            if e is not None:
-                exprs.append(e)
+            exprs.append(getattr(acc, attr, None))
     for name, _op, _val in query.filters:
-        exprs.append(getattr(cubedef.get_label(name), "_expr", None))
+        exprs.extend(_label_exprs(cubedef.get_label(name)))
     exprs = [e for e in exprs if e is not None]
     return sales_fact_for(spark, sf_dir, referenced_prefixes(exprs))
 

@@ -51,11 +51,7 @@ def stream_into_board(
     contract: prime cached slices only while the stream is caught up
     (``processAllAvailable``) and no other writer is appending, so a primed
     snapshot never overlaps a yet-undelivered micro-batch."""
-    board.snapshot_cache = True
-    with board._lock:
-        for key, (cq, cdf) in list(board._cache.items()):
-            board._cache[key] = (cq, cdf.localCheckpoint(eager=True))
-            cdf.unpersist()
+    board._snapshot_frames()
     return (
         stream_df.writeStream.queryName(query_name)
         .outputMode("append")

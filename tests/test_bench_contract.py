@@ -12,9 +12,15 @@ import json
 def test_nav_emitted_steps_are_the_headline_sequence():
     import bench
 
+    from tools import bench_nav
+
     assert bench.NAV_EMITTED_STEPS == (
         "parse", "s1_cold", "s2_repeat", "s3_drill", "s4_drill2", "s5_rollup",
     )
+    # every emitted step is one engine_nav runs (it times exactly
+    # ENGINE_STEPS), so a rename there cannot empty the bench's nav block
+    assert set(bench.NAV_EMITTED_STEPS) <= set(bench_nav.ENGINE_STEPS)
+    assert set(bench_nav.WARM_STEPS) <= set(bench_nav.ENGINE_STEPS)
 
 
 def test_worst_case_bench_line_length():

@@ -351,6 +351,11 @@ def test_demo_app_serves_star_cube(spark):
     doc = r.get_json()
     assert doc["rows"] and "revenue" in doc["rows"][0]["values"]
 
+    # the navigation panel renders, date-range widget included
+    r = client.get("/nav.json?q=a:region/v:revenue")
+    assert r.status_code == 200, r.data
+    assert "order_day" in [w.get("axis") for w in r.get_json()["widgets"]]
+
     # engine errors surface as 404 (reference ErrorTo404 contract)
     r = client.get("/table.html?q=a:nonexistent_axis")
     assert r.status_code == 404

@@ -146,22 +146,31 @@ def test_nulls_first_axis_order(spark):
     assert [r["k"] for r in s.rows()] == [None, "a", "b"]
 
 
+def _route(b):
+    """(route, detail) of the board's last slice decision."""
+    from bacon_spark.operators import decisions
+
+    d = decisions.last("cold_fold", context=b.decisions_context)
+    return d.route, d.detail
+
+
 def test_slice_cache_reuse(cubedef, sells):
     b = CuttingBoard(cubedef, sells)
     q = CubeQuery().add_axis("month").add_axis("item").add_value("number")
     s1 = b.slice(q)
+    assert _route(b)[1]["served_from"] == "base"
     s1.rows()
     # exact reuse
-    assert len(b._cache) == 1
     s2 = b.slice(q)
     assert s2.df is not None
-    assert len(b._cache) == 1
+    assert _route(b) == ("local_warm", {"kind": "exact_repeat", "rows": 3})
     # roll-up reuse: coarser axes, same filters
     q2 = CubeQuery().add_axis("month").add_value("number")
     s3 = b.slice(q2)
     jan = dt.date(2010, 1, 1)
     assert s3[jan].record["number"] == 281
-    assert len(b._cache) == 1  # answered from cache, not recomputed
+    route, detail = _route(b)  # answered from cache, not recomputed
+    assert route == "local_warm" and detail["reaggregated"]
     # drill reuse: eq-filter on a cached axis
     q3 = (
         CubeQuery()
@@ -171,6 +180,8 @@ def test_slice_cache_reuse(cubedef, sells):
     )
     s4 = b.slice(q3)
     assert s4[jan].record["number"] == 180
+    route, detail = _route(b)
+    assert route == "local_warm" and detail["drilled"] and not detail["reaggregated"]
     b.clear_cache()
 
 
@@ -198,9 +209,12 @@ def test_board_concurrent_slicing_is_safe(cubedef, sells):
     def worker(i):
         try:
             q = queries[i % len(queries)]
+            # odd workers go through Slice.collect, which stores rows in
+            # the entry other threads are reading and promoting
+            s = b.slice(q)
             got = {
                 tuple(sorted(r.asDict().items()))
-                for r in b.slice(q).to_df().collect()
+                for r in (s.collect() if i % 2 else s.to_df().collect())
             }
             assert got == expected[i % len(queries)]
         except Exception as e:  # pragma: no cover
@@ -311,6 +325,37 @@ def test_nav_sequence_cache_hits_never_rescan(cubedef, spark, tmp_path):
     assert "InMemoryRelation" in plan, plan
     b.clear_cache()
     b2.clear_cache()
+
+
+def test_frame_reuse_reordered_axes_keeps_average(cubedef, sells):
+    """A cached frame answers the same axes in another order by
+    projection: nothing is re-aggregated, so a non-mergeable Average
+    is served as computed (re-aggregating it raised NotImplementedError)."""
+    b = CuttingBoard(cubedef, sells)
+    q1 = CubeQuery().add_axis("month").add_axis("item").add_value("avg_number")
+    b.slice(q1).to_df()  # frame cached, rows never collected
+    q2 = CubeQuery().add_axis("item").add_axis("month").add_value("avg_number")
+    got = sorted(map(tuple, b.slice(q2).collect()))
+    assert _route(b)[1]["served_from"] == "frame"
+    want = sorted(map(tuple, board(cubedef, sells).slice(q2).collect()))
+    assert got == want
+    b.clear_cache()
+
+
+def test_clear_cache_unpersists_every_frame(cubedef, sells):
+    """Two slices with the same axes and filters but different values
+    get one cache entry each, and clear_cache() releases both frames
+    (the second used to overwrite the first's entry, leaving it
+    persisted in Spark's cache manager)."""
+    b = CuttingBoard(cubedef, sells)
+    q1 = CubeQuery().add_axis("item").add_value("number")
+    s1 = b.slice(q1)
+    df1 = s1.to_df()
+    s1.collect()
+    b.slice(q1.add_value("avg_number")).collect()
+    b.clear_cache()
+    plan = df1.select("*")._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan, plan
 
 
 def test_local_serving_invalidated_by_refresh(cubedef, spark, sells):

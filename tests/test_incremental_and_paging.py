@@ -26,6 +26,7 @@ from bacon_spark import (
 )
 from bacon_spark.accumulators import CappedCollectSet, Percentile
 from bacon_spark.engine import keyset_page
+from bacon_spark.operators import decisions
 from bacon_spark.operators.scale import capped_distinct
 
 SCHEMA = "date date, item string, place string, number long"
@@ -57,19 +58,26 @@ def cubedef():
 # --- incremental refresh ----------------------------------------------------
 
 
+def _served_from(b):
+    """What the board's last Spark-planned slice read: base, frame or lattice."""
+    d = decisions.last("cold_fold", context=b.decisions_context)
+    assert d.route == "spark", d
+    return d.detail["served_from"]
+
+
 def test_refresh_merges_cached_slices(cubedef, spark):
     base = spark.createDataFrame(BASE, SCHEMA)
     delta = spark.createDataFrame(DELTA, SCHEMA)
     b = CuttingBoard(cubedef, base)
     q = CubeQuery().add_axis("month").add_axis("item").add_value("number").add_value("n")
     b.slice(q).rows()  # populate the cache
-    assert len(b._cache) == 1
+    assert _served_from(b) == "base"
 
     b.refresh(delta)
-    assert len(b._cache) == 1  # mergeable slice kept and updated
 
     jan, feb = dt.date(2010, 1, 1), dt.date(2010, 2, 1)
     s = b.slice(q)
+    assert _served_from(b) == "frame"  # mergeable slice kept and updated
     assert s[jan]["apples"].record == {"number": 200, "n": 3}
     assert s[feb]["pears"].record == {"number": 7, "n": 1}
 
@@ -87,16 +95,31 @@ def test_refresh_evicts_non_mergeable(cubedef, spark):
     b = CuttingBoard(cubedef, base)
     q = CubeQuery().add_axis("month").add_value("avg_number")
     b.slice(q).rows()
-    assert len(b._cache) == 1
 
     b.refresh(delta)
-    assert len(b._cache) == 0  # Average partials can't merge from finished values
 
-    # recompute over the grown frame is still correct:
+    # Average partials can't merge from finished values: the slice was
+    # evicted, and the recompute over the grown frame is still correct:
     # Jan: (100+101+80+20)/4 = 75.25, Feb: (50+7)/2 = 28.5
     s = b.slice(q)
+    assert _served_from(b) == "base"
     assert s[dt.date(2010, 1, 1)].record["avg_number"] == pytest.approx(75.25)
     assert s[dt.date(2010, 2, 1)].record["avg_number"] == pytest.approx(28.5)
+    b.clear_cache()
+
+
+def test_refresh_merges_axes_only_slices(cubedef, spark):
+    """An axes-only slice (distinct label values) absorbs a delta too:
+    its merge is a distinct over old and new rows (an empty agg() list
+    used to fail the refresh)."""
+    base = spark.createDataFrame(BASE, SCHEMA)
+    delta = spark.createDataFrame([(dt.date(2010, 3, 1), "plums", "italy", 1)], SCHEMA)
+    b = CuttingBoard(cubedef, base)
+    q = CubeQuery().add_axis("item")
+    b.slice(q).rows()
+    b.refresh(delta)
+    assert [r["item"] for r in b.slice(q).rows()] == ["apples", "pears", "plums"]
+    assert _served_from(b) == "frame"
     b.clear_cache()
 
 
@@ -110,7 +133,8 @@ def test_count_rollup_reuse(cubedef, spark):
     coarse = CubeQuery().add_axis("month").add_value("n")
     s = b.slice(coarse)
     assert s[dt.date(2010, 1, 1)].record["n"] == 3
-    assert len(b._cache) == 1  # rollup served from cache, nothing new cached
+    d = decisions.last("cold_fold", context=b.decisions_context)
+    assert d.route == "local_warm" and d.detail["reaggregated"]  # rollup served from cache
     b.clear_cache()
 
 
@@ -216,13 +240,14 @@ def test_snapshot_cache_survives_source_writes(spark, tmp_path):
     cd.add_measure(Measure("number", acc=Sum()))
     b = CuttingBoard(cd, spark.read.schema(SCHEMA).parquet(path), snapshot_cache=True)
     q = CubeQuery().add_axis("item").add_value("number")
-    assert b.slice(q)["apples"].record["number"] == 230
+    # cache the frame only: the read after the write must come from it
+    assert {r["item"]: r["number"] for r in b.slice(q).to_df().collect()}["apples"] == 230
 
     # delta lands in the SAME path (what a stream sink does), then refresh
     spark.createDataFrame(DELTA, SCHEMA).write.mode("append").parquet(path)
-    key, (cq, cdf) = next(iter(b._cache.items()))
-    frozen = {r["item"]: r["number"] for r in cdf.collect()}
-    assert frozen["apples"] == 230  # snapshot did NOT absorb the new files
+    frozen = b.slice(q)
+    assert _served_from(b) == "frame"
+    assert frozen["apples"].record["number"] == 230  # snapshot did NOT absorb the new files
 
     b.refresh(spark.createDataFrame(DELTA, SCHEMA), grow_base=False)
     s = b.slice(q)

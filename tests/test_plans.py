@@ -67,6 +67,7 @@ def test_no_python_row_udfs_in_core_queries(spark):
 
 def test_join_culling(spark):
     from bacon_spark import CubeDef, CubeQuery, Label, Measure, Sum
+    from bacon_spark.cubedef import DayLabel
     from bacon_spark.sources.star import fact_for_cube, referenced_prefixes
 
     # expression scan
@@ -82,6 +83,15 @@ def test_join_culling(spark):
     plan = fact._jdf.queryExecution().executedPlan().toString()
     # only the lineitem<->orders join remains; 5 dimension joins culled
     assert plan.count("Join") == 1, plan
+
+    # a date-hierarchy label keeps its column in _base, not _expr: a query
+    # whose only orders column is o_orderdate still joins orders
+    cd.add_label(DayLabel("order_day", "o_orderdate"))
+    qd = CubeQuery().add_axis("order_day").add_value("qty")
+    fact = fact_for_cube(spark, "/root/testdata/sf0.001", cd, qd)
+    plan = fact._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Join") == 1, plan
+    assert fact.groupBy("o_orderdate").count().limit(1).collect()
 
     # q02's plan keeps the chain to region but culls part+supplier
     from bacon_spark.queries import QUERIES

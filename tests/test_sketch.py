@@ -560,6 +560,43 @@ def test_max_event_time_stats_sidecar(spark, tmp_path):
     assert third["cached"] is False and third["max_us"] > first["max_us"]
 
 
+def test_sentinel_bound_is_exact_under_non_utc_os_timezone(spark, tmp_path, monkeypatch):
+    """q85/q99's sentinel-exclusion bound goes into F.lit(), which converts
+    a NAIVE datetime through the driver's OS timezone: the bound must be
+    UTC-aware so its instant is the staged max under any TZ. An input
+    with no real events raises a clear error instead of a TypeError."""
+    import datetime as dt
+    import time
+
+    from bacon_spark.errors import DataError
+    from bacon_spark.gate.streaming import _max_real_ts
+
+    path = str(tmp_path / "staged_ev")
+    base = dt.datetime(2024, 1, 1)
+    rows = [(base + dt.timedelta(hours=h), "click" if h < 5 else "sent") for h in range(7)]
+    spark.createDataFrame(rows, "ts timestamp, event_type string").write.parquet(path)
+    want = (
+        spark.read.parquet(path)
+        .filter(F.col("event_type") != "sent")
+        .agg(F.max(F.unix_micros("ts")))
+        .first()[0]
+    )
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        hi = _max_real_ts(spark, path)
+        got = spark.range(1).select(F.unix_micros(F.lit(hi))).first()[0]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert got == want
+
+    sentinels = str(tmp_path / "sentinels_only")
+    spark.createDataFrame(rows[5:], "ts timestamp, event_type string").write.parquet(sentinels)
+    with pytest.raises(DataError, match="no non-sentinel events"):
+        _max_real_ts(spark, sentinels)
+
+
 def test_key_skew_stats_sidecar_cached_and_staleness(spark, tmp_path):
     # VERDICT r5 task #6: the auto-salt decision is table metadata —
     # computed once per ingest, reused across calls, recomputed only

@@ -156,6 +156,7 @@ def test_streaming_incremental_cube_maintenance(spark, tmpdir):
 
     from bacon_spark import CubeDef, CubeQuery, CuttingBoard, Label, Measure, Sum
     from bacon_spark.accumulators import Count
+    from bacon_spark.operators import decisions
     from bacon_spark.streaming.incremental import stream_into_board
 
     data_dir = os.path.join(tmpdir, "data")
@@ -181,7 +182,6 @@ def test_streaming_incremental_cube_maintenance(spark, tmpdir):
         sq.processAllAvailable()
         # no cache yet -> nothing maintained; now cache a slice
         assert board.slice(q).rows()  # populates cache from current files
-        assert len(board._cache) == 1
 
         batch2 = _rows()[20:]
         _write_events(spark, data_dir, batch2)
@@ -190,6 +190,9 @@ def test_streaming_incremental_cube_maintenance(spark, tmpdir):
         sq.stop()
 
     s = board.slice(q)
+    # the maintained frame answers: no recompute over the base files
+    d = decisions.last("cold_fold", context=board.decisions_context)
+    assert (d.route, d.detail["served_from"]) == ("spark", "frame")
     want_total = sum(r[4] for r in _rows())
     assert s["click"].record == {"total": pytest.approx(want_total), "n": 40}
 

@@ -1,25 +1,28 @@
 """Warm-path (navigation-sequence) head-to-head: the reference's
-differentiator is its slice cache with cost-based reuse
-(/root/reference/bacon/cutting.py:137-202,235-522) — an interactive user
-parses a DSL query, slices, then drills/filters/rolls up, and every step
-after the first is served from cached slices. The engine has the full
-analogue (engine.py CuttingBoard._reuse_plan: exact reuse cost 1, drill
-cost 2, re-agg cost 10). The cold-query bench (tools/bench_reference.py)
-never exercises either cache, which is exactly where Spark's ~0.3-0.6 s
-per-query floor loses to a preloaded Python loop on small tables
-(VERDICT r6 q07/q10 `weak`). This tool measures the NAVIGATION sequence
-on BOTH engines, same data, same session.
+differentiator is its slice cache (/root/reference/bacon/cutting.py:
+137-202,235-522) — an interactive user parses a DSL query, slices, then
+drills/filters/rolls up, and every step after the first is served from
+cached slices. The engine has the analogue: one LRU of earlier results
+and one reuse rule (engine.py CuttingBoard._derive) that answers exact
+repeats, drills and roll-ups from collected rows with no Spark job. The
+cold-query bench (tools/bench_reference.py) never exercises either
+cache, which is exactly where Spark's ~0.3-0.6 s per-query floor loses
+to a preloaded Python loop on small tables (VERDICT r6 q07/q10 `weak`).
+This tool measures the NAVIGATION sequence on BOTH engines, same data,
+same session.
 
 Sequence (identical shapes on both engines):
   parse      parse the axes/values DSL string (builders/url.py both sides)
   s1_cold    slice: returnflag x linestatus, 4 Sum measures, month<= filter
-  s2_repeat  the exact same query again           (exact reuse, cost 1)
-  s3_drill   +returnflag='R' filter, drop axis    (drill,       cost 2)
+  s2_repeat  the exact same query again           (exact repeat)
+  s3_drill   +returnflag='R' filter, drop axis    (drill: eq-pinned, projected)
   s4_drill2  +linestatus='F' filter, drop axis    (drill from s3's slice)
-  s5_rollup  original minus linestatus axis       (re-aggregate, cost 10)
+  s5_rollup  original minus linestatus axis       (roll-up: re-aggregated)
 plus the VERDICT r6 `weak` shapes re-run warm:
   q07_cold / q07_repeat   min/max/stddev over customer (small table)
   q10_cold / q10_repeat   in/ni membership filters over part
+  q12_cold / q12_repeat   set-algebra filters over part tags
+  q04_cold / q04_repeat   order-by-measure top-10 over orders
 
 Usage: python tools/bench_nav.py [sf_dir] [--skip-reference]
 Prints ONE JSON line:
@@ -43,6 +46,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 DSL = "a:returnflag/a:linestatus/v:sum_qty/v:sum_base_price/v:disc_price/v:charge"
+#: every step engine_nav times, in the order it runs them
+ENGINE_STEPS = (
+    "parse", "s1_cold", "s2_repeat", "s3_drill", "s4_drill2", "s5_rollup",
+    "q07_cold", "q07_repeat", "q10_cold", "q10_repeat",
+    "q12_cold", "q12_repeat", "q04_cold", "q04_repeat",
+)
 WARM_STEPS = (
     "s2_repeat", "s3_drill", "s4_drill2", "s5_rollup",
     "q07_repeat", "q10_repeat", "q12_repeat", "q04_repeat",
@@ -109,24 +118,10 @@ def engine_nav(sf_dir: str) -> dict:
     board.slice(warm).collect()
     board.clear_cache()
 
-    steps: dict[str, float] = {}
-    t0 = time.perf_counter()
     q1 = parse_query(DSL, cd).add_filter("ship_month", "le", dt.date(1998, 9, 1))
-    steps["parse"] = round(time.perf_counter() - t0, 4)
-
-    def run(name: str, q) -> None:
-        t = time.perf_counter()
-        board.slice(q).collect()
-        steps[name] = round(time.perf_counter() - t, 4)
-
-    run("s1_cold", q1)
-    run("s2_repeat", q1)
     q3 = q1.add_filter("returnflag", "eq", "R").remove_axis("returnflag")
-    run("s3_drill", q3)
     q4 = q3.add_filter("linestatus", "eq", "F").remove_axis("linestatus")
-    run("s4_drill2", q4)
     q5 = q1.remove_axis("linestatus")
-    run("s5_rollup", q5)
 
     # q07-shaped: Min/Max/StdDev over customer
     cd7 = CubeDef("customer")
@@ -141,9 +136,6 @@ def engine_nav(sf_dir: str) -> dict:
         CubeQuery().add_axis("nation")
         .add_value("min_bal").add_value("max_bal").add_value("std_bal")
     )
-    run7 = lambda n: (lambda t: (b7.slice(q7).collect(), steps.__setitem__(n, round(time.perf_counter() - t, 4))))(time.perf_counter())  # noqa: E731
-    run7("q07_cold")
-    run7("q07_repeat")
 
     # q10-shaped: in/ni membership filters over part
     cd10 = CubeDef("part")
@@ -159,9 +151,6 @@ def engine_nav(sf_dir: str) -> dict:
         .add_filter("brand", "in", frozenset({"Brand#1", "Brand#2", "Brand#3"}))
         .add_filter("size", "ni", frozenset({1, 2, 3}))
     )
-    run10 = lambda n: (lambda t: (b10.slice(q10).collect(), steps.__setitem__(n, round(time.perf_counter() - t, 4))))(time.perf_counter())  # noqa: E731
-    run10("q10_cold")
-    run10("q10_repeat")
 
     # q12-shaped: set-algebra filters over part tags (round 10 — the
     # driver-side set-op twins make this a local fold like q10)
@@ -179,9 +168,6 @@ def engine_nav(sf_dir: str) -> dict:
         .add_filter("tags", "hasall", frozenset({"widget"}))
         .add_filter("tags", "hasnone", frozenset({"bolt", "gear"}))
     )
-    run12 = lambda n: (lambda t: (b12.slice(q12).collect(), steps.__setitem__(n, round(time.perf_counter() - t, 4))))(time.perf_counter())  # noqa: E731
-    run12("q12_cold")
-    run12("q12_repeat")
 
     # q04-shaped: order-by-measure + top-10, the renderer's driver-side
     # sort over the slice (orders fits the snapshot cap at sf0.1 and
@@ -197,23 +183,40 @@ def engine_nav(sf_dir: str) -> dict:
     # the Spark path pushes the limit into the plan (TakeOrdered) — the
     # reference has no in-query top-k, its renderer sorts in Python
     # (observers/tables.py:411-427), which its side below replays.
-    q4 = (
+    q04 = (
         CubeQuery().add_axis("custkey").add_value("total")
         .set_order("total", descending=True)
     )
 
-    def run4(n):
-        t = time.perf_counter()
-        sl = b4.slice(q4)
+    def top10() -> None:
+        sl = b4.slice(q04)
         if sl._rows is not None:
             top = [tuple(r) for r in sl._rows[:10]]
         else:
             top = [tuple(r) for r in sl.to_df().limit(10).collect()]
-        steps[n] = round(time.perf_counter() - t, 4)
         assert len(top) == 10
 
-    run4("q04_cold")
-    run4("q04_repeat")
+    work = {
+        "parse": lambda: parse_query(DSL, cd),
+        "s1_cold": lambda: board.slice(q1).collect(),
+        "s2_repeat": lambda: board.slice(q1).collect(),
+        "s3_drill": lambda: board.slice(q3).collect(),
+        "s4_drill2": lambda: board.slice(q4).collect(),
+        "s5_rollup": lambda: board.slice(q5).collect(),
+        "q07_cold": lambda: b7.slice(q7).collect(),
+        "q07_repeat": lambda: b7.slice(q7).collect(),
+        "q10_cold": lambda: b10.slice(q10).collect(),
+        "q10_repeat": lambda: b10.slice(q10).collect(),
+        "q12_cold": lambda: b12.slice(q12).collect(),
+        "q12_repeat": lambda: b12.slice(q12).collect(),
+        "q04_cold": top10,
+        "q04_repeat": top10,
+    }
+    steps: dict[str, float] = {}
+    for name in ENGINE_STEPS:
+        t = time.perf_counter()
+        work[name]()
+        steps[name] = round(time.perf_counter() - t, 4)
 
     spark.stop()
     return {
