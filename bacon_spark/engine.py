@@ -245,18 +245,22 @@ class CuttingBoard:
             self._cache.clear()
 
     # --- the slice cache ---------------------------------------------------
-    def _store(self, query: CubeQuery, frame=None, schema=None, rows=None) -> None:
-        """Insert or update *query*'s entry as most recently used: a new
-        frame replaces (and unpersists) an older one, a missing frame or
-        missing rows keep the entry's. Evicted frames are unpersisted."""
+    def _store(self, query: CubeQuery, frame=None, schema=None, rows=None):
+        """Insert or update *query*'s entry as most recently used and
+        return the frame it holds. A frame the entry already holds is
+        kept: a concurrent slice of the same query may be collecting it,
+        and a collect under unpersist can return no rows. A new frame
+        with the same plan shares the held one's Spark cache entry, so
+        only a different plan is unpersisted. Missing rows keep the
+        entry's. Evicted frames are unpersisted."""
         key = _memo_key(query)
         with self._lock:
             old = self._cache.get(key)
             if old is not None:
-                if frame is None:
+                if old[1] is not None:
+                    if frame is not None and not frame.sameSemantics(old[1]):
+                        frame.unpersist()
                     frame = old[1]
-                elif old[1] is not None and old[1] is not frame:
-                    old[1].unpersist()
                 if rows is None:
                     schema, rows = old[2], old[3]
             self._cache[key] = (query, frame, schema, rows)
@@ -265,6 +269,7 @@ class CuttingBoard:
                 _, (_q, evicted, _s, _r) = self._cache.popitem(last=False)
                 if evicted is not None:
                     evicted.unpersist()
+        return frame
 
     def _memoize_rows(self, query: CubeQuery, schema, rows) -> None:
         """Called by Slice.collect(): keep the materialized result for
@@ -688,7 +693,7 @@ class CuttingBoard:
                 result = result.localCheckpoint(eager=True)
             else:
                 result = result.persist(StorageLevel.MEMORY_AND_DISK)
-            self._store(query, frame=result)
+            result = self._store(query, frame=result)
         return self._order(result, query), "base"
 
     def _lattice_plan(self, query: CubeQuery) -> DataFrame | None:

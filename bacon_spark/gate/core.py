@@ -75,7 +75,7 @@ def q02_revenue_by_region_nation(spark, sf_dir):
     """Star-schema join (broadcast dims) + cube over the denormalized fact
     — bacon's pre-joined dataset re-expressed as declared joins (SURVEY
     §2.4)."""
-    from ..sources.star import fact_for_cube
+    from ..sources.star import StarTables, fact_for_cube
 
     cd = CubeDef("sales")
     cd.add_label(Label("region"))
@@ -84,7 +84,7 @@ def q02_revenue_by_region_nation(spark, sf_dir):
     cd.add_measure(Measure("n_items", "l_orderkey", acc=Count()))
     q = CubeQuery().add_axis("region").add_axis("nation").add_value("revenue").add_value("n_items")
     # join culling: part/supplier joins are dropped (query never touches them)
-    fact = fact_for_cube(spark, sf_dir, cd, q)
+    fact = fact_for_cube(StarTables(spark, sf_dir), cd, q)
     df = board(cd, fact).slice(q).to_df()
     return finalize(df, {"revenue": 2})
 
@@ -653,11 +653,11 @@ def q20_drilldown(spark, sf_dir):
         .add_value("revenue")
         .add_filter("orderstatus", "eq", "F")
     )
-    from ..sources.star import fact_for_cube
+    from ..sources.star import StarTables, fact_for_cube
 
     # drill: filter region='AMERICA', drop the region axis
     q1 = q0.add_filter("region", "eq", "AMERICA").remove_axis("region")
-    df = board(cd, fact_for_cube(spark, sf_dir, cd, q1)).slice(q1).to_df()
+    df = board(cd, fact_for_cube(StarTables(spark, sf_dir), cd, q1)).slice(q1).to_df()
     return finalize(df, {"revenue": 2})
 
 
@@ -1020,9 +1020,9 @@ def q48_multi_pivot(spark, sf_dir):
     aggregation phases and TWO shuffles (groupBy(year,pk) then pivotfirst
     by year); with a known value list the sum-of-CASE form is strictly
     better, and at 100 TB it halves the shuffled bytes."""
-    from ..sources.star import sales_fact_for
+    from ..sources.star import StarTables, sales_fact_for
 
-    fact = sales_fact_for(spark, sf_dir, {"l_", "o_"})
+    fact = sales_fact_for(StarTables(spark, sf_dir), {"l_", "o_"})
     combos = ["A_F", "N_F", "N_O", "R_F"]
     pk = F.concat_ws("_", "l_returnflag", "l_linestatus")
     df = fact.groupBy(F.year("o_orderdate").cast("int").alias("order_year")).agg(

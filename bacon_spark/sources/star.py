@@ -14,9 +14,15 @@ bucketed on o_orderkey alongside lineitem's l_orderkey — we keep it
 broadcast here (driver-defined fixtures keep it ~1/4 the fact rows) and
 expose ``join_orders_broadcast=False`` to switch to a shuffle join that AQE
 can convert as it sees fit.
+
+Freshness: a ``StarTables`` reads each table once, so a board's file
+listings are fixed when it is constructed, as its base frame's already are;
+``refresh(..., grow_base=False)`` re-reads them.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,44 +87,16 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return dfs
 
 
-def sales_fact(
-    spark: SparkSession,
-    sf_dir: str,
-    join_orders_broadcast: bool = True,
-) -> DataFrame:
+def sales_fact(spark: SparkSession, sf_dir: str, join_orders_broadcast: bool = True) -> DataFrame:
     """The denormalized fact view: lineitem ⋈ orders ⋈ customer ⋈ nation ⋈
-    region ⋈ part ⋈ supplier, with cube-ready derived columns.
+    region ⋈ part ⋈ supplier, with cube-ready derived columns — the culled
+    view (``sales_fact_for``) with every table joined.
 
     This is bacon's "dataset" (one wide record stream) expressed the
     idiomatic Spark way: declared joins the optimizer can reorder, with
     small sides broadcast.
     """
-    t = load_tables(
-        spark,
-        sf_dir,
-        ("lineitem", "orders", "customer", "nation", "region", "part", "supplier"),
-    )
-    orders = t["orders"]
-    if join_orders_broadcast:
-        orders = F.broadcast(orders)
-    fact = (
-        t["lineitem"]
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            F.broadcast(t["nation"].withColumnRenamed("n_name", "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(t["region"].withColumnRenamed("r_name", "region")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-    )
-    return fact.withColumn(
-        "revenue", F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    ).withColumn("charge", F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax")))
+    return sales_fact_for(StarTables(spark, sf_dir), _PREFIXES, join_orders_broadcast)
 
 
 def sales_cubedef():
@@ -181,16 +159,8 @@ def sales_cubedef():
 # Join culling
 # ---------------------------------------------------------------------------
 
-#: column-name prefix -> (table, join build order dependency)
-_PREFIX_TABLE = {
-    "l_": "lineitem",
-    "o_": "orders",
-    "c_": "customer",
-    "n_": "nation",
-    "r_": "region",
-    "p_": "part",
-    "s_": "supplier",
-}
+#: column-name prefixes of the star's tables
+_PREFIXES = {"l_", "o_", "c_", "n_", "r_", "p_", "s_"}
 #: derived fact-view columns -> the source prefixes they pull in
 _DERIVED = {
     "revenue": {"l_"},
@@ -208,7 +178,8 @@ _REQUIRES = {
     "s_": ("supplier",),
 }
 
-_IDENT_RE = None
+_IDENT_RE = re.compile(r"\b([a-z])_[a-z_]+\b")
+_DERIVED_RES = [(re.compile(rf"\b{name}\b"), pulls) for name, pulls in _DERIVED.items()]
 
 
 def referenced_prefixes(exprs: list) -> set[str]:
@@ -217,28 +188,84 @@ def referenced_prefixes(exprs: list) -> set[str]:
     String expressions are scanned for identifiers; Column objects are
     conservatively treated as referencing everything (we can't introspect a
     compiled Column cheaply)."""
-    import re
-
-    global _IDENT_RE
-    if _IDENT_RE is None:
-        _IDENT_RE = re.compile(r"\b([a-z])_[a-z_]+\b")
     out: set[str] = set()
     for e in exprs:
         if isinstance(e, str):
             for m in _IDENT_RE.finditer(e):
                 p = m.group(1) + "_"
-                if p in _PREFIX_TABLE:
+                if p in _PREFIXES:
                     out.add(p)
-            for name, pulls in _DERIVED.items():
-                if re.search(rf"\b{name}\b", e):
+            for name_re, pulls in _DERIVED_RES:
+                if name_re.search(e):
                     out |= pulls
         else:
-            return set(_PREFIX_TABLE)  # unknown expr: keep everything
+            return set(_PREFIXES)  # unknown expr: keep everything
     return out
 
 
+#: lineitem's join chain in build order: (table, fact key, dimension key, rename)
+_JOINS = (
+    ("orders", "l_orderkey", "o_orderkey", None),
+    ("customer", "o_custkey", "c_custkey", None),
+    ("nation", "c_nationkey", "n_nationkey", ("n_name", "nation")),
+    ("region", "n_regionkey", "r_regionkey", ("r_name", "region")),
+    ("part", "l_partkey", "p_partkey", None),
+    ("supplier", "l_suppkey", "s_suppkey", None),
+)
+
+
+class StarTables:
+    """The star's tables and culled fact views for one owner, each built
+    once: ``tables[name]`` reads a table on first use (a parquet read runs
+    one schema-inference job), ``tables.fact(needed)`` joins a join set on
+    first use. An owner is a ``StarCuttingBoard`` for its life or one gate
+    query call; there is no process-wide cache. File listings are fixed at
+    the first read, as any DataFrame's are; ``reread`` drops both memos."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str):
+        self.spark = spark
+        self.sf_dir = sf_dir
+        self._tables: dict[str, DataFrame] = {}
+        self._facts: dict[tuple, DataFrame] = {}
+        self._delta: DataFrame | None = None  # rows absorbed so far
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._tables:
+            self._tables[name] = read_table(self.spark, self.sf_dir, name)
+        return self._tables[name]
+
+    def fact(self, needed, join_orders_broadcast: bool = True) -> DataFrame:
+        """lineitem joined to the tables in *needed*, with derived columns."""
+        key = (tuple(j[0] for j in _JOINS if j[0] in needed), join_orders_broadcast)
+        if key not in self._facts:
+            fact = self["lineitem"]
+            for name, fact_key, dim_key, rename in _JOINS:
+                if name in needed:
+                    dim = self[name].withColumnRenamed(*rename) if rename else self[name]
+                    if name != "orders" or join_orders_broadcast:
+                        dim = F.broadcast(dim)
+                    fact = fact.join(dim, F.col(fact_key) == F.col(dim_key))
+            revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            fact = fact.withColumns({"revenue": revenue, "charge": revenue * (1 + F.col("l_tax"))})
+            if self._delta is not None:
+                fact = fact.unionByName(self._delta.select(*fact.columns))
+            self._facts[key] = fact
+        return self._facts[key]
+
+    def absorb(self, delta: DataFrame) -> None:
+        """Fold *delta* (full fact view rows) into every view, kept or later."""
+        self._delta = delta if self._delta is None else self._delta.unionByName(delta)
+        for key, fact in self._facts.items():
+            self._facts[key] = fact.unionByName(delta.select(*fact.columns))
+
+    def reread(self) -> None:
+        """Drop the table reads and views; absorbed rows are kept."""
+        self._tables.clear()
+        self._facts.clear()
+
+
 def sales_fact_for(
-    spark: SparkSession, sf_dir: str, prefixes: set[str], join_orders_broadcast: bool = True
+    tables: StarTables, prefixes: set[str], join_orders_broadcast: bool = True
 ) -> DataFrame:
     """The denormalized fact view with unused dimension joins CULLED.
 
@@ -248,83 +275,55 @@ def sales_fact_for(
     therefore scans exactly those two tables. This is the reference's
     Django `select_related` pushdown (/root/reference/bacon/sql.py:301-330)
     re-expressed as join-graph pruning."""
-    needed: list[str] = []
-    for p in prefixes:
-        for t in _REQUIRES.get(p, ()):
-            if t not in needed:
-                needed.append(t)
-    order = ["orders", "customer", "nation", "region", "part", "supplier"]
-    needed.sort(key=order.index)
-
-    t = load_tables(spark, sf_dir, ("lineitem", *needed))
-    fact = t["lineitem"]
-    if "orders" in needed:
-        o = F.broadcast(t["orders"]) if join_orders_broadcast else t["orders"]
-        fact = fact.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-    if "customer" in needed:
-        fact = fact.join(F.broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
-    if "nation" in needed:
-        fact = fact.join(
-            F.broadcast(t["nation"].withColumnRenamed("n_name", "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-    if "region" in needed:
-        fact = fact.join(
-            F.broadcast(t["region"].withColumnRenamed("r_name", "region")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-    if "part" in needed:
-        fact = fact.join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
-    if "supplier" in needed:
-        fact = fact.join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-    return fact.withColumn(
-        "revenue", F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    ).withColumn(
-        "charge", F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
-    )
+    needed = {t for p in prefixes for t in _REQUIRES.get(p, ())}
+    return tables.fact(needed, join_orders_broadcast)
 
 
-def _label_exprs(obj) -> tuple:
-    """The source expressions a label or measure reads: its ``_expr``,
-    plus the ``_base`` column a date-hierarchy label truncates."""
-    return getattr(obj, "_expr", None), getattr(obj, "_base", None)
-
-
-def fact_for_cube(spark: SparkSession, sf_dir: str, cubedef, query) -> DataFrame:
+def fact_for_cube(tables: StarTables, cubedef, query) -> DataFrame:
     """Build the minimal fact view for a specific query: collect every
     expression the query references (axes, values incl. hidden, filters)
     and cull unreferenced dimension joins."""
-    exprs = []
-    for a in query.axes:
-        exprs.extend(_label_exprs(cubedef.get_label(a)))
-    for v in query.values:
-        m = cubedef.get_value(v)
-        exprs.extend(_label_exprs(m))
-        acc = m.acc
-        for attr in ("num", "den", "label_expr"):
-            exprs.append(getattr(acc, attr, None))
-    for name, _op, _val in query.filters:
-        exprs.extend(_label_exprs(cubedef.get_label(name)))
-    exprs = [e for e in exprs if e is not None]
-    return sales_fact_for(spark, sf_dir, referenced_prefixes(exprs))
+    labels = [cubedef.get_label(n) for n in (*query.axes, *(f[0] for f in query.filters))]
+    measures = [cubedef.get_value(v) for v in query.values]
+    # a label or measure reads its ``_expr``, plus the ``_base`` column a
+    # date-hierarchy label truncates; a ratio or group accumulator its own
+    exprs = [getattr(o, a, None) for o in labels + measures for a in ("_expr", "_base")]
+    exprs += [getattr(m.acc, a, None) for m in measures for a in ("num", "den", "label_expr")]
+    return sales_fact_for(tables, referenced_prefixes([e for e in exprs if e is not None]))
 
 
 class StarCuttingBoard:
     """CuttingBoard over the star schema with automatic join culling: each
     query gets the minimal fact view for the labels/measures/filters it
     references (see fact_for_cube). Everything else — slice cache, reuse
-    strategies, ordering — is inherited."""
+    strategies, ordering — is inherited.
+
+    The board reads each table once and builds each culled view once, in
+    one ``StarTables`` for its life. So its file listings are fixed when it
+    is constructed, as its base frame's already are. ``refresh`` folds the
+    delta into every view; ``refresh(..., grow_base=False)`` re-reads the
+    tables instead."""
 
     def __new__(cls, cubedef, spark: SparkSession, sf_dir: str, cache_results: bool = True):
         from ..engine import CuttingBoard
 
+        tables = StarTables(spark, sf_dir)
+
         class _Board(CuttingBoard):
             def _frame_for(self, query):
-                return fact_for_cube(spark, sf_dir, self.cubedef, query)
+                with self._lock:
+                    return fact_for_cube(tables, self.cubedef, query)
 
-        full = sales_fact(spark, sf_dir)
-        board = _Board(cubedef, full, cache_results=cache_results)
-        return board
+            def refresh(self, delta_df, grow_base=True):
+                with self._lock:
+                    if grow_base:
+                        tables.absorb(delta_df)
+                    else:
+                        tables.reread()
+                super().refresh(delta_df, grow_base)
+
+        full = sales_fact_for(tables, _PREFIXES)
+        return _Board(cubedef, full, cache_results=cache_results)
 
 
 def events_cubedef():

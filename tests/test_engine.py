@@ -358,6 +358,23 @@ def test_clear_cache_unpersists_every_frame(cubedef, sells):
     assert "InMemoryRelation" not in plan, plan
 
 
+def test_store_keeps_the_frame_a_concurrent_slice_reads(cubedef, sells):
+    """Two threads that miss on one query both plan and persist it; the
+    second to store must not unpersist the frame the first may still be
+    collecting (a collect under unpersist can return no rows, even for a
+    grand total). Both frames share one Spark cache entry: the held
+    frame wins and stays cached."""
+    b = CuttingBoard(cubedef, sells)
+    q = CubeQuery().add_value("number")
+    first = b._aggregate(q).persist()
+    late = b._aggregate(q).persist()
+    assert b._store(q, frame=first) is first
+    assert b._store(q, frame=late) is first
+    assert first.storageLevel.useMemory
+    assert [r["number"] for r in b.slice(q).collect()] == [331]
+    b.clear_cache()
+
+
 def test_local_serving_invalidated_by_refresh(cubedef, spark, sells):
     """refresh() drops the rows memo: post-refresh answers include the
     delta instead of serving stale memoized rows."""

@@ -141,6 +141,44 @@ def test_count_rollup_reuse(cubedef, spark):
 # --- keyset pagination ------------------------------------------------------
 
 
+def test_star_board_refresh_reaches_cold_slices(spark, sf_dir, tmp_path):
+    """A StarCuttingBoard plans cold slices over culled fact views, not its
+    base frame: every view, kept or built later, must absorb a refreshed
+    delta, and a ``grow_base=False`` refresh re-reads the tables."""
+    import shutil
+
+    from bacon_spark.sources.star import StarCuttingBoard, sales_cubedef, sales_fact
+
+    def counts(board, label):
+        q = CubeQuery().add_axis(label).add_value("n_items")
+        return {r[label]: r["n_items"] for r in board.slice(q).rows()}
+
+    delta = sales_fact(spark, sf_dir).filter("l_orderkey <= 40")
+    grown = sales_fact(spark, sf_dir).unionByName(delta)
+    want = CuttingBoard(sales_cubedef(), grown, cache_results=False)
+    board = StarCuttingBoard(sales_cubedef(), spark, sf_dir)
+    counts(board, "orderstatus")  # builds the lineitem+orders view
+    board.refresh(delta)
+    # a new view, the kept one, and a new view with every dimension
+    for label in ("returnflag", "orderpriority", "region"):
+        assert counts(board, label) == counts(want, label), label
+
+    # the delta's lineitem rows land in the board's own storage
+    data = tmp_path / "sf"
+    data.mkdir()
+    for name in ("orders", "customer", "nation", "region", "part", "supplier"):
+        shutil.copyfile(f"{sf_dir}/{name}.parquet", data / f"{name}.parquet")
+    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    lineitem.write.parquet(str(data / "lineitem.parquet"))
+    board = StarCuttingBoard(sales_cubedef(), spark, str(data))
+    counts(board, "orderstatus")
+    lineitem.filter("l_orderkey <= 40").write.mode("append").parquet(str(data / "lineitem.parquet"))
+    board.refresh(delta, grow_base=False)
+    for label in ("returnflag", "orderpriority"):
+        assert counts(board, label) == counts(want, label), label
+    board.clear_cache()
+
+
 def test_keyset_walk_covers_all_rows_once(spark, sf_dir):
     from bacon_spark.sources.star import read_table
 

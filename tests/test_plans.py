@@ -68,7 +68,7 @@ def test_no_python_row_udfs_in_core_queries(spark):
 def test_join_culling(spark):
     from bacon_spark import CubeDef, CubeQuery, Label, Measure, Sum
     from bacon_spark.cubedef import DayLabel
-    from bacon_spark.sources.star import fact_for_cube, referenced_prefixes
+    from bacon_spark.sources.star import StarTables, fact_for_cube, referenced_prefixes
 
     # expression scan
     assert referenced_prefixes(["l_quantity * 2"]) == {"l_"}
@@ -79,7 +79,7 @@ def test_join_culling(spark):
     cd.add_label(Label("orderstatus", "o_orderstatus"))
     cd.add_measure(Measure("qty", "l_quantity", acc=Sum()))
     q = CubeQuery().add_axis("orderstatus").add_value("qty")
-    fact = fact_for_cube(spark, "/root/testdata/sf0.001", cd, q)
+    fact = fact_for_cube(StarTables(spark, SF), cd, q)
     plan = fact._jdf.queryExecution().executedPlan().toString()
     # only the lineitem<->orders join remains; 5 dimension joins culled
     assert plan.count("Join") == 1, plan
@@ -88,7 +88,7 @@ def test_join_culling(spark):
     # whose only orders column is o_orderdate still joins orders
     cd.add_label(DayLabel("order_day", "o_orderdate"))
     qd = CubeQuery().add_axis("order_day").add_value("qty")
-    fact = fact_for_cube(spark, "/root/testdata/sf0.001", cd, qd)
+    fact = fact_for_cube(StarTables(spark, SF), cd, qd)
     plan = fact._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Join") == 1, plan
     assert fact.groupBy("o_orderdate").count().limit(1).collect()
@@ -101,12 +101,22 @@ def test_join_culling(spark):
     assert plan2.count("BroadcastHashJoin") == 4
 
 
+def _slice_rows(board, q) -> list[tuple]:
+    """A slice's rows as sorted tuples, floats rounded past summation-order
+    noise."""
+    return sorted(
+        tuple(round(v, 6) if isinstance(v, float) else v for v in r)
+        for r in board.slice(q).rows()
+    )
+
+
 def test_star_board_culls_per_query(spark):
     from bacon_spark import CubeQuery
-    from bacon_spark.sources.star import StarCuttingBoard, sales_cubedef
+    from bacon_spark.engine import CuttingBoard
+    from bacon_spark.sources.star import StarCuttingBoard, sales_cubedef, sales_fact
 
-    board = StarCuttingBoard(sales_cubedef(), spark, "/root/testdata/sf0.001",
-                             cache_results=False)
+    board = StarCuttingBoard(sales_cubedef(), spark, SF, cache_results=False)
+    ref = CuttingBoard(sales_cubedef(), sales_fact(spark, SF), cache_results=False)
     # lineitem+orders query -> 1 join
     q1 = CubeQuery().add_axis("orderstatus").add_value("quantity")
     p1 = board.slice(q1).to_df()._jdf.queryExecution().executedPlan().toString()
@@ -120,9 +130,66 @@ def test_star_board_culls_per_query(spark):
     q3 = CubeQuery().add_axis("brand").add_axis("orderstatus").add_value("quantity")
     p3 = board.slice(q3).to_df()._jdf.queryExecution().executedPlan().toString()
     assert p3.count("BroadcastHashJoin") == 2
-    # results still correct
-    got = {r["orderstatus"]: r["quantity"] for r in board.slice(q1).rows()}
-    assert got and all(v > 0 for v in got.values())
+    # every join set answers as the unculled fact view does
+    q4 = CubeQuery().add_axis("region").add_axis("nation").add_value("n_items")
+    q5 = CubeQuery().add_axis("returnflag").add_value("revenue").add_value("n_parts")
+    for q in (q1, q2, q3, q4, q5):
+        got = _slice_rows(board, q)
+        assert got and got == _slice_rows(ref, q), q
+
+
+#: queries over distinct join sets of the sales cube
+_JOIN_SET_AXES = [
+    ("orderstatus",),
+    ("brand",),
+    ("region", "brand"),
+    ("returnflag",),
+    ("mktsegment",),
+    ("nation",),
+    ("orderpriority", "ptype"),
+    ("mktsegment", "brand"),
+]
+
+
+def test_star_board_plans_cold_slices_without_jobs(spark):
+    """A board reads each table once, at construction: planning a cold
+    slice on a new join set launches no Spark job (each parquet read
+    infers its schema in one). Threads slicing distinct join sets on one
+    board get the serial rows."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from bacon_spark import CubeQuery
+    from bacon_spark.sources.star import StarCuttingBoard, sales_cubedef
+
+    def query(axes):
+        q = CubeQuery()
+        for a in axes:
+            q = q.add_axis(a)
+        return q.add_value("quantity").add_value("n_items")
+
+    queries = [query(axes) for axes in _JOIN_SET_AXES]
+    sc = spark.sparkContext
+    board = StarCuttingBoard(sales_cubedef(), spark, SF)
+    sc.setJobGroup("star-board-plan", "plan cold slices")
+    try:
+        for q in queries[:3]:
+            board.slice(q)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("star-board-plan")) == []
+
+    serial = [_slice_rows(board, q) for q in queries]
+    assert all(serial)
+    shared = StarCuttingBoard(sales_cubedef(), spark, SF)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(lambda q: _slice_rows(shared, q), queries, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == serial
 
 
 def test_q40_no_cartesian_or_bnlj(spark):
