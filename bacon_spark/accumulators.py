@@ -54,13 +54,15 @@ class Accumulator:
         raise NotImplementedError
 
     #: driver-side twin of ``merge`` for the warm navigation path
-    #: (engine CuttingBoard._local_rows): fold a list of FINISHED values
+    #: (engine CuttingBoard._serve_rows): fold a list of FINISHED values
     #: (collected from a cached slice) into one re-aggregated value
     #: without a Spark job. None = no driver-side merge; the engine then
     #: falls back to the Spark re-aggregation plan. Only meaningful when
     #: ``reaggregatable`` — this is the reference's in-memory
     #: ManipulateSlice (/root/reference/bacon/cutting.py:336-522) reborn
-    #: as an O(result-size) Python fold over bounded cached rows.
+    #: as an O(result-size) Python fold over bounded cached rows. Every
+    #: reaggregatable accumulator defines it: ``CuttingBoard.refresh``
+    #: merges each delta into cached rows with it.
     py_merge = None
 
     #: driver-side twin of ``agg`` for the COLD small-table path (engine

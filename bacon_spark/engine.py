@@ -36,6 +36,12 @@ Matches are ranked rows before frames, then projection before
 re-aggregation. A first hit on a small board may instead fold the eager
 snapshot driver-side (``_local_cold``); its result lands in the same LRU.
 
+``refresh`` keeps the LRU current: one Spark job extracts the delta's
+label values and measure inputs (``_extract``), and each entry whose
+values are all reaggregatable merges the delta's partials (``_fold``)
+into its rows in Python. Every kept entry then holds rows, so re-reads
+after a refresh launch no job; the other entries are evicted.
+
 Scale note (100 TB): cube *results* are small (bounded by group count) even
 when inputs are huge, so persisting results is cheap; the wins come from
 never re-scanning the fact table for drill/roll-up navigation sequences,
@@ -47,8 +53,9 @@ from __future__ import annotations
 import functools
 import threading
 from collections import OrderedDict
+from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -111,6 +118,26 @@ def _memo_key(query: CubeQuery):
     return (query.axes, _frozen_filters(query.filters), query.values, query.order)
 
 
+def _as_rows(schema, out: list[dict]) -> list[Row]:
+    """*out*'s row dicts as Rows in *schema*'s column order."""
+    mk = Row(*schema.names)
+    return [mk(*(d[c] for c in schema.names)) for d in out]
+
+
+class _Snapshot(NamedTuple):
+    """Label values and measure inputs collected from a frame into Python
+    (``CuttingBoard._extract``). *rows* are tuples laid out by
+    *idx* (column name -> position); *fields* are the extracted columns'
+    StructFields, *minputs* each py-foldable measure's input columns and
+    *ftypes* its finished-value StructField."""
+
+    rows: list
+    idx: dict
+    fields: dict
+    minputs: dict
+    ftypes: dict
+
+
 class CuttingBoard:
     """Answers CubeQuery objects over a DataFrame, with result caching.
 
@@ -147,6 +174,9 @@ class CuttingBoard:
         # persisted result of a Spark-planned slice (None otherwise);
         # *schema*/*rows* the collected result (None until collected).
         self._cache: OrderedDict = OrderedDict()
+        # bumped by every refresh: a slice planned at an older generation
+        # describes pre-refresh data, and the cache drops what it stores
+        self._generation = 0
         self.local_hits = 0  # diagnostics: queries answered without a job
         # decisions-log scope for THIS board (operators/decisions.py):
         # concurrent boards interleave in the process-global log, so the
@@ -165,10 +195,10 @@ class CuttingBoard:
         # dimension tables. Bounded by construction: a table over the cap
         # disables the path (one capped probe, never an unbounded
         # collect), so at 100 TB only genuinely small cubes qualify.
-        self._snap_rows: list | None = None
         self._snap_cap = eager_snapshot_rows
-        if eager_snapshot_rows:
-            self._build_snapshot(eager_snapshot_rows)
+        self._snap = (
+            self._extract(df, eager_snapshot_rows) if eager_snapshot_rows else None
+        )
 
     def register_lattice(self, lattice) -> None:
         """Register a precomputed CubeLattice (operators/lattice.py) as a
@@ -186,19 +216,20 @@ class CuttingBoard:
 
     # --- public API -------------------------------------------------------
     def slice(self, query: CubeQuery) -> Slice:
+        gen = self._generation
         hits = self._matches(query) if self.cache_results else []
         for cq, _frame, schema, rows, added, reagg in hits:
             if rows is not None:
-                made = self._serve_rows(query, cq, schema, rows, added, reagg)
+                made = self._serve_rows(query, cq, schema, rows, added, reagg, gen)
                 if made is not None:
                     return made
         if self.cache_results:
-            made = self._local_cold(query)
+            made = self._local_cold(query, gen)
             if made is not None:
                 return made
         # no driver-side form answers exactly: this query takes a Spark
         # plan, over a cached frame, a lattice grain or the base table
-        df, served_from = self._plan(query, hits)
+        df, served_from = self._plan(query, hits, gen)
         decisions.record(
             "cold_fold",
             "spark",
@@ -208,7 +239,7 @@ class CuttingBoard:
             values=query.values,
         )
         return Slice(
-            self.cubedef, query, df, board=self if self.cache_results else None
+            self.cubedef, query, df, board=self if self.cache_results else None, gen=gen
         )
 
     def rows(self, query: CubeQuery, limit: int | None = None, offset: int = 0) -> DataFrame:
@@ -245,16 +276,24 @@ class CuttingBoard:
             self._cache.clear()
 
     # --- the slice cache ---------------------------------------------------
-    def _store(self, query: CubeQuery, frame=None, schema=None, rows=None):
+    def _store(self, query: CubeQuery, frame=None, schema=None, rows=None, gen=None):
         """Insert or update *query*'s entry as most recently used and
         return the frame it holds. A frame the entry already holds is
         kept: a concurrent slice of the same query may be collecting it,
         and a collect under unpersist can return no rows. A new frame
         with the same plan shares the held one's Spark cache entry, so
         only a different plan is unpersisted. Missing rows keep the
-        entry's. Evicted frames are unpersisted."""
+        entry's. Evicted frames are unpersisted.
+
+        A result planned at generation *gen* older than the board's
+        misses a refresh's delta and is not stored; its frame is
+        unpersisted and returned, and still answers from its lineage."""
         key = _memo_key(query)
         with self._lock:
+            if gen is not None and gen != self._generation:
+                if frame is not None:
+                    frame.unpersist()
+                return frame
             old = self._cache.get(key)
             if old is not None:
                 if old[1] is not None:
@@ -271,12 +310,12 @@ class CuttingBoard:
                     evicted.unpersist()
         return frame
 
-    def _memoize_rows(self, query: CubeQuery, schema, rows) -> None:
-        """Called by Slice.collect(): keep the materialized result for
-        warm navigation. Bounded per entry (MEMO_MAX_ROWS) and in entry
-        count (CACHE_SIZE, LRU)."""
+    def _memoize_rows(self, query: CubeQuery, schema, rows, gen) -> None:
+        """Called by Slice.collect(): keep the materialized result of a
+        slice planned at generation *gen* for warm navigation. Bounded
+        per entry (MEMO_MAX_ROWS) and in entry count (CACHE_SIZE, LRU)."""
         if len(rows) <= self.MEMO_MAX_ROWS:
-            self._store(query, schema=schema, rows=list(rows))
+            self._store(query, schema=schema, rows=list(rows), gen=gen)
 
     def _snapshot_frames(self) -> None:
         """Switch to snapshot caching and pin every cached frame as a
@@ -318,11 +357,14 @@ class CuttingBoard:
             return None
         pinned = {n for n, op, _v in query.filters if op == "eq"}
         reagg = any(a not in query.axes and a not in pinned for a in parent_axes)
-        if reagg and not all(
-            self.cubedef.get_value(v).acc.reaggregatable for v in query.values
-        ):
+        if reagg and not self._mergeable(query):
             return None
         return added, reagg
+
+    def _mergeable(self, query: CubeQuery) -> bool:
+        """Can finished results of *query* merge (the partial/final
+        contract): is every value's accumulator reaggregatable?"""
+        return all(self.cubedef.get_value(v).acc.reaggregatable for v in query.values)
 
     def _matches(self, query: CubeQuery) -> list:
         """Every cache entry that answers *query* by ``_derive``, as
@@ -347,7 +389,7 @@ class CuttingBoard:
         hits.sort(key=lambda h: (h[3] is None, h[5]))
         return hits
 
-    def _serve_rows(self, query: CubeQuery, cq: CubeQuery, schema, rows, added, reagg):
+    def _serve_rows(self, query: CubeQuery, cq: CubeQuery, schema, rows, added, reagg, gen):
         """Answer *query* from a cached entry's rows driver-side — no
         Spark job. Returns None when a piece lacks an exact Python twin
         (an added op without a ``PY_FILTER_OPS`` twin, a value without
@@ -399,11 +441,9 @@ class CuttingBoard:
         from pyspark.sql.types import StructType
 
         out_schema = StructType([fields[c] for c in (*query.axes, *query.values)])
-        made = self._local_made(
-            query, out_schema, [tuple(d[c] for c in out_schema.names) for d in out]
-        )
+        made = self._local_made(query, out_schema, _as_rows(out_schema, out))
         # cache the derived result too: further drills chain off it
-        self._memoize_rows(query, out_schema, made._rows)
+        self._memoize_rows(query, out_schema, made._rows, gen)
         return made
 
     def _serve_frame(self, df: DataFrame, query: CubeQuery, added, reagg) -> DataFrame:
@@ -415,19 +455,21 @@ class CuttingBoard:
             return self._reaggregate(df, query)
         return df.select(*query.axes, *query.values)
 
-    def _build_snapshot(self, cap: int) -> None:
-        """Extract every label value and (py-foldable) measure input from
-        the base frame into driver memory, capped at *cap* rows.
+    def _extract(self, frame: DataFrame, bound: int) -> _Snapshot | None:
+        """Extract every label value and (py-foldable) measure input of
+        *frame* into Python, capped at *bound* rows (probed via
+        ``limit(bound + 1)``). None when *frame* is bigger, or streaming:
+        the caller stays on the Spark path.
 
         One Spark job, at board construction — the analogue of the
         reference's ``_get_dataset`` preload (/root/reference/bacon/
         cutting.py:122-135), billed as load time, not query time. The
         extraction happens SPARK-side (label Columns, measure input
         expressions), so the driver fold needs no Python twins of label
-        logic — only of the accumulators' folds (``py_agg``). A table
-        bigger than the cap disables the path (probed via limit(cap+1))."""
-        if self.df.isStreaming:
-            return
+        logic — only of the accumulators' folds (``py_agg``). ``refresh``
+        extracts each delta the same way."""
+        if frame.isStreaming:
+            return None
         cols: list[Column] = []
         names: list[str] = []
         for lab in self.cubedef.labels:
@@ -446,67 +488,52 @@ class CuttingBoard:
                 keys.append(n)
             minputs[m.name] = keys
             probes.append(m.agg_column().alias(m.name))
-        snap_df = self.df.select(*cols)
-        rows = snap_df.limit(cap + 1).collect()
-        if len(rows) > cap:
-            return  # too big for a driver-side fold: stay on the Spark path
+        snap_df = frame.select(*cols)
+        rows = snap_df.limit(bound + 1).collect()
+        if len(rows) > bound:
+            return None
         # finished-value types, resolved ONCE by catalyst analysis (no job)
         # so cold queries never pay per-hit schema analysis
         ftypes = {}
         if probes:
-            probe_schema = self.df.groupBy(F.lit(1)).agg(*probes).schema
+            probe_schema = frame.groupBy(F.lit(1)).agg(*probes).schema
             ftypes = {f.name: f for f in probe_schema.fields[1:]}
-        with self._lock:
-            self._snap_idx = {n: i for i, n in enumerate(names)}
-            self._snap_fields = {f.name: f for f in snap_df.schema.fields}
-            self._snap_minputs = minputs
-            self._snap_ftypes = ftypes
-            self._snap_rows = [tuple(r) for r in rows]
+        return _Snapshot(
+            [tuple(r) for r in rows],
+            {n: i for i, n in enumerate(names)},
+            {f.name: f for f in snap_df.schema.fields},
+            minputs,
+            ftypes,
+        )
 
-    def _local_cold(self, query: CubeQuery):
-        """FIRST-hit driver-side aggregation over the eager snapshot: filter
-        with the PY_FILTER_OPS twins, group by axis values, fold each
-        measure's extracted inputs with its accumulator's ``py_agg``.
-        Returns None whenever any piece lacks an exact Python twin — the
-        query then takes the normal Spark plan."""
-        snap = self._snap_rows
-        if snap is None:
-            return None
-        idx = self._snap_idx
+    def _fold(self, query: CubeQuery, snap: _Snapshot) -> list[dict] | None:
+        """Aggregate *query* over an extracted snapshot in Python, with
+        no Spark job: filter with the PY_FILTER_OPS twins, group by axis
+        values, fold each value's extracted inputs with its accumulator's
+        ``py_agg``. Returns unordered row dicts, or None whenever a piece
+        lacks an exact Python twin."""
+        idx = snap.idx
         try:
             fspec = fuse_py_filters(
                 [
-                    (idx[n], compile_py_filter(op, v, self._snap_fields[n].dataType))
+                    (idx[n], compile_py_filter(op, v, snap.fields[n].dataType))
                     for n, op, v in query.filters
                 ]
             )
             axi = [idx[a] for a in query.axes]
         except KeyError:
             return None
-        from pyspark.sql.types import StructField, StructType
-
         folds = []  # (value name, fold fn, snapshot col indices)
-        fields = []
         for v in query.values:
-            meas = self.cubedef.get_value(v)
-            fn = meas.acc.py_agg
-            if fn is None:
+            fn = self.cubedef.get_value(v).acc.py_agg
+            # a plain label used as a value (Group accumulator): its input
+            # IS the extracted label column
+            keys = snap.minputs.get(v, [v] if v in snap.fields else None)
+            if fn is None or keys is None:
                 return None
-            keys = self._snap_minputs.get(v)
-            if keys is None:
-                # a plain label used as a value (Group accumulator): its
-                # input IS the extracted label column
-                if v in self._snap_fields and v not in self._snap_minputs:
-                    keys = [v]
-                else:
-                    return None
-                f = self._snap_fields[v]
-                fields.append(StructField(v, f.dataType, True))
-            else:
-                fields.append(self._snap_ftypes[v])
             folds.append((v, fn, [idx[k] for k in keys]))
         try:
-            rows = snap
+            rows = snap.rows
             for i, f in fspec:
                 rows = [r for r in rows if f(r[i])]
             if query.axes:
@@ -547,20 +574,38 @@ class CuttingBoard:
                 out.append(d)
         except TypeError:
             return None  # unhashable label value etc: take the Spark plan
+        return out
+
+    def _local_cold(self, query: CubeQuery, gen):
+        """FIRST-hit aggregation in Python: ``_fold`` over the eager
+        snapshot. Returns None when the board has no snapshot or the fold
+        does not answer — the query then takes the normal Spark plan."""
+        snap = self._snap
+        if snap is None:
+            return None
+        out = self._fold(query, snap)
+        if out is None:
+            return None
         self._py_order(query, out)
+        from pyspark.sql.types import StructField, StructType
+
         out_schema = StructType(
-            [self._snap_fields[a] for a in query.axes] + fields
+            [snap.fields[a] for a in query.axes]
+            + [
+                snap.ftypes[v]
+                if v in snap.minputs
+                else StructField(v, snap.fields[v].dataType, True)
+                for v in query.values
+            ]
         )
-        made = self._local_made(
-            query, out_schema, [tuple(d[c] for c in out_schema.names) for d in out]
-        )
-        self._memoize_rows(query, out_schema, made._rows)
+        made = self._local_made(query, out_schema, _as_rows(out_schema, out))
+        self._memoize_rows(query, out_schema, made._rows, gen)
         self.local_hits += 1
         decisions.record(
             "cold_fold",
             "local_cold",
             context=self.decisions_context,
-            snapshot_rows=len(snap),
+            snapshot_rows=len(snap.rows),
             rows=len(out),
         )
         return made
@@ -570,11 +615,6 @@ class CuttingBoard:
         use them directly (zero Spark work), while to_df() lazily wraps
         them in a DataFrame only if a caller actually wants the plan —
         keeping the driver contract without paying for it per hit."""
-        from pyspark.sql import Row
-
-        if rows and not isinstance(rows[0], Row):
-            mk = Row(*schema.names)
-            rows = [mk(*t) for t in rows]
         spark = self.df.sparkSession
         return Slice(
             self.cubedef,
@@ -617,66 +657,109 @@ class CuttingBoard:
     def refresh(self, delta_df: DataFrame, grow_base: bool = True) -> None:
         """Incrementally fold *delta_df* (newly-arrived rows, same schema)
         into the board: the base frame grows, and every cached slice whose
-        measures are mergeable is updated by aggregating ONLY the delta and
-        merging partials into the cached result — never re-scanning the full
+        values are all reaggregatable merges the delta's partial
+        aggregates into its rows in Python — never re-scanning the full
         base. Non-mergeable slices (Average/Group/ratio finished values
-        cannot absorb partials) are evicted and recompute lazily.
+        cannot absorb partials) are evicted and recompute lazily, as is a
+        slice whose result would exceed ``MEMO_MAX_ROWS``.
+
+        One Spark job extracts the delta (``_extract``, bounded by
+        ``MEMO_MAX_ROWS``): each slice folds its partials from it, and the
+        eager snapshot appends it. Over the bound, or for a slice the fold
+        cannot answer, Spark aggregates the delta instead (and the eager
+        snapshot is dropped). Every kept slice then holds rows, so its
+        re-reads launch no job. Each slice's fate is logged as a
+        ``refresh`` decision: ``merged`` (``delta_from`` snapshot or
+        spark) or ``evicted`` (``reason``). The generation bump keeps a
+        slice planned before the refresh from storing stale rows.
 
         This is the incremental-view-maintenance form of the reference's
         dataset-refresh story — its lazy callable dataset re-pulled on cache
         invalidation (/root/reference/bacon/cutting.py:122-135,
         /root/reference/bacon/utils/cache.py:93-127) — made sound by the
         accumulator partial/final contract. At scale this is the
-        foreachBatch pattern: each micro-batch is a delta_df.
+        foreachBatch pattern: each micro-batch is a delta_df, and nothing
+        read from it stays lazy past the call.
 
         ``grow_base=False`` skips extending the base frame — pass it when
         the base already references the storage the deltas land in (the
         streaming-maintenance case, streaming/incremental.py), where a
         union per micro-batch would grow the plan tree without bound."""
-        if grow_base:
-            self.df = self.df.unionByName(delta_df)
-        # registered lattices are consulted FIRST by the planner, so they
-        # must absorb the delta too (or stop being consulted): mergeable
-        # lattices fold it in, non-mergeable ones are unregistered and
-        # queries fall back to cache/compute over the grown base
-        for lat in list(self._lattices):
-            if lat.reaggregatable:
-                lat.refresh(delta_df)
-            else:
-                self._lattices.remove(lat)
-                lat.unpersist()
-        # the eager snapshot describes the pre-refresh base: rebuild it
-        # over the grown frame (one bounded job, same cap discipline)
-        if self._snap_rows is not None:
-            self._snap_rows = None
-            self._build_snapshot(self._snap_cap)
         with self._lock:
-            # collected rows describe the pre-refresh data: all stale
-            for key, (cq, cdf, _s, _r) in list(self._cache.items()):
-                if cdf is None or not all(
-                    self.cubedef.get_value(v).acc.reaggregatable for v in cq.values
-                ):
+            wanted = self._snap is not None or any(
+                self._mergeable(cq) for cq, *_ in self._cache.values()
+            )
+        delta = self._extract(delta_df, self.MEMO_MAX_ROWS) if wanted else None
+        with self._lock:
+            self._generation += 1
+            if grow_base:
+                self.df = self.df.unionByName(delta_df)
+            # registered lattices are consulted FIRST by the planner, so
+            # they must absorb the delta too (or stop being consulted):
+            # mergeable lattices fold it in, non-mergeable ones are
+            # unregistered and queries fall back to cache/compute over the
+            # grown base
+            for lat in list(self._lattices):
+                if lat.reaggregatable:
+                    lat.refresh(delta_df)
+                else:
+                    self._lattices.remove(lat)
+                    lat.unpersist()
+            snap = self._snap
+            if snap is not None:
+                fits = delta is not None and len(snap.rows) + len(delta.rows) <= self._snap_cap
+                self._snap = snap._replace(rows=snap.rows + delta.rows) if fits else None
+            for key, (cq, frame, schema, rows) in list(self._cache.items()):
+                entry, detail = self._merge_entry(cq, frame, schema, rows, delta, delta_df)
+                if frame is not None:
+                    frame.unpersist()
+                if entry is None:
                     del self._cache[key]
-                    if cdf is not None:
-                        cdf.unpersist()
-                    continue
-                delta_slice = self._aggregate_frame(cq, delta_df)
-                # snapshot the merge (localCheckpoint = compute now, forget
-                # lineage): its plan reads the old cached slice and the
-                # delta — a micro-batch only readable during its batch —
-                # and left lazy it could silently recompute over a base
-                # that already contains the delta (double count)
-                merged = self._reaggregate(
-                    cdf.unionByName(delta_slice), cq
-                ).localCheckpoint(eager=True)
-                self._cache[key] = (cq, merged, None, None)
-                cdf.unpersist()
+                else:
+                    self._cache[key] = entry
+                decisions.record(
+                    "refresh",
+                    "evicted" if entry is None else "merged",
+                    context=self.decisions_context,
+                    axes=cq.axes,
+                    values=cq.values,
+                    **detail,
+                )
+
+    def _merge_entry(self, cq: CubeQuery, frame, schema, rows, delta, delta_df):
+        """One cache entry after ``refresh``, as ``(entry, detail)``: its
+        rows with the delta's partials merged in by the accumulators'
+        ``py_merge``, or None (evicted) when a value is not reaggregatable
+        or the result exceeds ``MEMO_MAX_ROWS``. A frame-only entry's
+        rows are collected first; the delta's partials come from the
+        extracted *delta* snapshot, else from *delta_df* on Spark."""
+        bound = self.MEMO_MAX_ROWS
+        if not self._mergeable(cq):
+            return None, {"reason": "not_reaggregatable"}
+        if rows is None:
+            schema, rows = frame.schema, frame.limit(bound + 1).collect()
+        if len(rows) > bound:
+            return None, {"reason": "over_bound"}
+        part = None if delta is None else self._fold(cq, delta)
+        delta_from = "snapshot"
+        if part is None:
+            part = self._aggregate_frame(cq, delta_df).limit(bound + 1).collect()
+            delta_from = "spark"
+        out = self._py_reaggregate(cq, [*rows, *part])
+        if len(out) > bound:
+            return None, {"reason": "over_bound"}
+        self._py_order(cq, out)
+        return (cq, None, schema, _as_rows(schema, out)), {
+            "delta_from": delta_from,
+            "rows": len(out),
+        }
 
     # --- planning ----------------------------------------------------------
-    def _plan(self, query: CubeQuery, hits) -> tuple[DataFrame, str]:
+    def _plan(self, query: CubeQuery, hits, gen) -> tuple[DataFrame, str]:
         """The Spark plan for *query* and what it reads: a registered
         lattice, the best cached frame among the ``_matches`` *hits*, or
-        (computed, persisted and cached) the base table."""
+        (computed, persisted and cached at generation *gen*) the base
+        table."""
         lat_df = self._lattice_plan(query)
         if lat_df is not None:
             return self._order(lat_df, query), "lattice"
@@ -693,7 +776,7 @@ class CuttingBoard:
                 result = result.localCheckpoint(eager=True)
             else:
                 result = result.persist(StorageLevel.MEMORY_AND_DISK)
-            result = self._store(query, frame=result)
+            result = self._store(query, frame=result, gen=gen)
         return self._order(result, query), "base"
 
     def _lattice_plan(self, query: CubeQuery) -> DataFrame | None:
@@ -956,6 +1039,7 @@ class Slice:
         _prefix=(),
         board=None,
         rows=None,
+        gen=None,
     ):
         self.cubedef = cubedef
         self.query = query
@@ -963,6 +1047,7 @@ class Slice:
         self._prefix = _prefix
         self._tree = None
         self._board = board  # feeds collected rows back to the warm memo
+        self._gen = gen  # the board generation this slice was planned at
         self._rows = rows  # prefetched rows (warm path): collect() is free
 
     @property
@@ -1002,7 +1087,9 @@ class Slice:
             else:
                 self._rows = self.df.collect()
             if self._board is not None:
-                self._board._memoize_rows(self.query, self.df.schema, self._rows)
+                self._board._memoize_rows(
+                    self.query, self.df.schema, self._rows, self._gen
+                )
         elif max_rows is not None and len(self._rows) > max_rows:
             raise QueryError(
                 f"slice has more than {max_rows} rows; refusing to "
@@ -1051,6 +1138,7 @@ class Slice:
             self._prefix + (value,),
             board=self._board,
             rows=self._rows,
+            gen=self._gen,
         )
         child._tree = self._tree
         return child

@@ -7,13 +7,14 @@ dataset re-pulled on cache invalidation
 /root/reference/bacon/utils/cache.py:93-127). The Spark-native upgrade is
 ``foreachBatch``: every micro-batch is a delta DataFrame, and
 ``CuttingBoard.refresh`` folds it into each cached slice by merging the
-delta's partial aggregates (sound by the accumulator partial/final
-contract) — no full rescan per batch, which is the only viable shape when
-the base stream is unbounded.
+delta's partial aggregates into the slice's rows (sound by the accumulator
+partial/final contract) — no full rescan per batch, which is the only
+viable shape when the base stream is unbounded.
 
-Each merged slice is materialized (counted) inside the batch: a micro-batch
-DataFrame is only guaranteed readable during its batch, so the merge must
-not stay lazy past the ``foreachBatch`` call.
+A micro-batch DataFrame is only guaranteed readable during its batch, so
+nothing read from it may stay lazy past the ``foreachBatch`` call: refresh
+collects the batch's label values and measure inputs in one job inside
+the batch, and every merged slice holds collected rows afterwards.
 """
 
 from __future__ import annotations
@@ -27,8 +28,8 @@ def refresh_on_batch(board) -> "callable":
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
         # grow_base=False: the board's base frame should reference the
         # storage the stream lands in; a union per batch would grow the
-        # plan tree without bound. refresh materializes each merged slice
-        # eagerly, so nothing stays lazy past this batch.
+        # plan tree without bound. refresh collects what it reads of the
+        # batch and merges into rows, so nothing stays lazy past it.
         board.refresh(batch_df, grow_base=False)
 
     return _fn

@@ -88,7 +88,7 @@ def _assert_same(got_rows, want_rows, ctx):
 
 def test_cold_fold_serves_first_hit_without_spark(cd, frame):
     b = CuttingBoard(cd, frame, eager_snapshot_rows=10_000)
-    assert b._snap_rows is not None
+    assert b._snap is not None
     ref = CuttingBoard(cd, frame, cache_results=False)
     q = (
         CubeQuery().add_axis("g").add_value("s").add_value("n")
@@ -169,7 +169,7 @@ def test_cold_fold_dim0_over_empty_selection(cd, frame):
 
 def test_cap_exceeded_disables_and_falls_back(cd, frame):
     b = CuttingBoard(cd, frame, eager_snapshot_rows=10)
-    assert b._snap_rows is None  # 400 rows > 10: snapshot refused
+    assert b._snap is None  # 400 rows > 10: snapshot refused
     ref = CuttingBoard(cd, frame, cache_results=False)
     q = CubeQuery().add_axis("h").add_value("s")
     _assert_same(b.slice(q).collect(), ref.slice(q).collect(), "fallback")
@@ -222,7 +222,7 @@ def test_cold_fold_set_ops_randomized_equivalence(spark):
     cd.add_measure(Measure("sp", "price", acc=Sum()))
     b = CuttingBoard(cd, frame, eager_snapshot_rows=10_000)
     ref = CuttingBoard(cd, frame, cache_results=False)
-    assert b._snap_rows is not None
+    assert b._snap is not None
     served = 0
     lit_pool = ["red", "blue", "green", "widget", "bolt", "gear", "", None]
     for trial in range(30):
@@ -253,7 +253,7 @@ def test_set_ops_on_scalar_column_rejected_both_paths(cd, frame):
 
     b = CuttingBoard(cd, frame, eager_snapshot_rows=10_000)
     ref = CuttingBoard(cd, frame, cache_results=False)
-    assert b._snap_rows is not None
+    assert b._snap is not None
     q = (
         CubeQuery().add_axis("h").add_value("s")
         .add_filter("g", "hasany", frozenset({"red"}))
@@ -303,14 +303,23 @@ def test_py_clean_cell_non_string_elements():
 
 
 def test_refresh_rebuilds_snapshot(cd, frame, spark):
+    """The snapshot takes the refreshed delta from the refresh's one
+    extraction (a limit probe may take two jobs) instead of re-collecting
+    the grown base."""
     b = CuttingBoard(cd, frame, eager_snapshot_rows=10_000)
-    n0 = len(b._snap_rows)
+    n0 = len(b._snap.rows)
     delta = spark.createDataFrame(
         [("g9", "h9", 9, 5.0, 1.0, "EUR")],
         "g string, h string, d long, num double, den double, cur string",
     )
-    b.refresh(delta)
-    assert len(b._snap_rows) == n0 + 1
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-refresh", "refresh a snapshot board")
+    try:
+        b.refresh(delta)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("snapshot-refresh")) <= 2
+    assert len(b._snap.rows) == n0 + 1
     q = CubeQuery().add_axis("g").add_value("s").add_filter("g", "eq", "g9")
     rows = b.slice(q).collect()
     assert len(rows) == 1 and rows[0]["s"] == 5.0

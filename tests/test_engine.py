@@ -376,8 +376,8 @@ def test_store_keeps_the_frame_a_concurrent_slice_reads(cubedef, sells):
 
 
 def test_local_serving_invalidated_by_refresh(cubedef, spark, sells):
-    """refresh() drops the rows memo: post-refresh answers include the
-    delta instead of serving stale memoized rows."""
+    """refresh() merges the delta into the rows memo: post-refresh answers
+    include the delta instead of serving stale memoized rows."""
     b = CuttingBoard(cubedef, sells, cache_results=True)
     q = CubeQuery().add_axis("item").add_value("number")
     before = {r["item"]: r["number"] for r in b.slice(q).collect()}
@@ -409,9 +409,11 @@ def test_pivot_render_cardinality_guard(cubedef, sells):
 
 def test_warm_path_randomized_navigation_equivalence(cubedef, spark):
     """Randomized navigation fuzz: a cached board driven through many
-    repeat/drill/rollup/reorder sequences must answer every step
-    identically to a fresh no-cache board (integer measures -> exact
-    equality). Seeded, so failures replay."""
+    repeat/drill/rollup/reorder/refresh sequences must answer every step
+    identically to a fresh no-cache board over the rows folded in so far
+    (integer measures -> exact equality). Refreshed deltas bring null
+    labels, a new label value and null Sum/Min/Max inputs. Seeded, so
+    failures replay."""
     import random
 
     from bacon_spark import Count, CuttingBoard, Max, Min, Sum
@@ -422,7 +424,13 @@ def test_warm_path_randomized_navigation_equivalence(cubedef, spark):
         g = None if i % 11 == 0 else f"g{i % 5}"
         h = f"h{i % 3}"
         rows.append((g, h, i % 7, i % 100))
-    df = spark.createDataFrame(rows, "g string, h string, d long, number long")
+    schema = "g string, h string, d long, number long"
+    df = spark.createDataFrame(rows, schema)
+    # held out of the base and folded in by "refresh" moves
+    held = [
+        (None if i % 4 == 0 else f"g{i % 6}", f"h{i % 3}", i % 7, None if i % 5 == 0 else i % 100)
+        for i in range(300, 380)
+    ]
     cd = CubeDef("t")
     for name in ("g", "h", "d"):
         cd.add_label(Label(name))
@@ -436,8 +444,10 @@ def test_warm_path_randomized_navigation_equivalence(cubedef, spark):
 
     warm = CuttingBoard(cd, df, cache_results=True)
 
+    current = df  # the base plus every delta folded in so far, as one frame
+
     def cold(q):
-        b = CuttingBoard(cd, df, cache_results=False)
+        b = CuttingBoard(cd, current, cache_results=False)
         return [tuple(r) for r in b.slice(q).collect()]
 
     total_local = 0
@@ -454,9 +464,16 @@ def test_warm_path_randomized_navigation_equivalence(cubedef, spark):
             got = [tuple(r) for r in warm.slice(q).collect()]
             assert got == cold(q), (seed, _step, q.axes, q.values, q.filters)
             move = rng.choice(
-                ["repeat", "drill", "drop", "rollup", "reorder", "reproject"]
+                ["repeat", "drill", "drop", "rollup", "reorder", "reproject", "refresh"]
             )
-            if move == "reproject":
+            if move == "refresh":
+                k = rng.randint(1, 4)
+                delta = spark.createDataFrame(held[:k], schema)
+                warm.refresh(delta)
+                rows += held[:k]
+                held = held[k:]
+                current = spark.createDataFrame(rows, schema)
+            elif move == "reproject":
                 # value subset / reorder against the SAME cached slices —
                 # regression for the cost-1 projection bug the deep fuzz
                 # found (a subset query served the parent's extra columns)
@@ -488,6 +505,7 @@ def test_warm_path_randomized_navigation_equivalence(cubedef, spark):
                 q = q.set_order(rng.choice(q.values), -1 if rng.random() < 0.5 else 1)
         total_local += warm.local_hits
     assert warm.local_hits > 20, warm.local_hits  # the warm path actually served
+    assert len(rows) > 300, len(rows)  # refresh moves folded deltas in
     warm.clear_cache()
 
 

@@ -65,6 +65,28 @@ def _served_from(b):
     return d.detail["served_from"]
 
 
+def _jobs(spark, fn):
+    """Run *fn* under a fresh job group; returns (its result, Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"refresh-test-{id(fn)}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _exact_repeat(b):
+    """Was the board's last slice an exact cache hit on collected rows?"""
+    d = decisions.last("cold_fold", context=b.decisions_context)
+    return (d.route, d.detail.get("kind")) == ("local_warm", "exact_repeat")
+
+
+def _fresh_rows(cubedef, frame, q):
+    return [tuple(r) for r in CuttingBoard(cubedef, frame, cache_results=False).slice(q).collect()]
+
+
 def test_refresh_merges_cached_slices(cubedef, spark):
     base = spark.createDataFrame(BASE, SCHEMA)
     delta = spark.createDataFrame(DELTA, SCHEMA)
@@ -74,18 +96,17 @@ def test_refresh_merges_cached_slices(cubedef, spark):
     assert _served_from(b) == "base"
 
     b.refresh(delta)
+    d = decisions.last("refresh", context=b.decisions_context)
+    assert (d.route, d.detail["delta_from"]) == ("merged", "snapshot")
 
     jan, feb = dt.date(2010, 1, 1), dt.date(2010, 2, 1)
-    s = b.slice(q)
-    assert _served_from(b) == "frame"  # mergeable slice kept and updated
+    s, jobs = _jobs(spark, lambda: b.slice(q))
+    assert _exact_repeat(b) and jobs == 0  # merged rows, no Spark job
     assert s[jan]["apples"].record == {"number": 200, "n": 3}
     assert s[feb]["pears"].record == {"number": 7, "n": 1}
 
-    # merged result == full recompute over base+delta
-    fresh = CuttingBoard(cubedef, base.unionByName(delta), cache_results=False).slice(q)
-    assert sorted(map(tuple, (r.values() for r in s.rows()))) == sorted(
-        map(tuple, (r.values() for r in fresh.rows()))
-    )
+    # merged result == full recompute over base+delta, in the same order
+    assert [tuple(r) for r in s.collect()] == _fresh_rows(cubedef, base.unionByName(delta), q)
     b.clear_cache()
 
 
@@ -97,6 +118,8 @@ def test_refresh_evicts_non_mergeable(cubedef, spark):
     b.slice(q).rows()
 
     b.refresh(delta)
+    d = decisions.last("refresh", context=b.decisions_context)
+    assert (d.route, d.detail["reason"]) == ("evicted", "not_reaggregatable")
 
     # Average partials can't merge from finished values: the slice was
     # evicted, and the recompute over the grown frame is still correct:
@@ -118,8 +141,135 @@ def test_refresh_merges_axes_only_slices(cubedef, spark):
     q = CubeQuery().add_axis("item")
     b.slice(q).rows()
     b.refresh(delta)
-    assert [r["item"] for r in b.slice(q).rows()] == ["apples", "pears", "plums"]
-    assert _served_from(b) == "frame"
+    rows, jobs = _jobs(spark, lambda: b.slice(q).rows())
+    assert [r["item"] for r in rows] == ["apples", "pears", "plums"]
+    assert _exact_repeat(b) and jobs == 0
+    assert [(r["item"],) for r in rows] == _fresh_rows(cubedef, base.unionByName(delta), q)
+    b.clear_cache()
+
+
+def test_refresh_runs_one_extraction_and_rereads_run_none(cubedef, spark):
+    """One refresh over four collected mergeable slices launches at most
+    the delta extraction's jobs (a limit probe may take two), not a merge
+    job per slice; every re-read is then an exact hit with no job. Frame
+    merges used to run a union, re-aggregation and checkpoint per slice,
+    and each re-read went back to Spark."""
+    base = spark.createDataFrame(BASE, SCHEMA)
+    delta = spark.createDataFrame(DELTA, SCHEMA)
+    b = CuttingBoard(cubedef, base)
+    queries = [
+        CubeQuery().add_axis("month").add_axis("item").add_value("number").add_value("n"),
+        CubeQuery().add_axis("place").add_value("number"),
+        CubeQuery().add_value("n").add_value("number"),
+        CubeQuery().add_axis("item").add_value("n").add_filter("place", "eq", "italy"),
+    ]
+    for q in queries:
+        b.slice(q).collect()
+    _, jobs = _jobs(spark, lambda: b.refresh(delta))
+    assert jobs <= 2, jobs
+    grown = base.unionByName(delta)
+    for q in queries:
+        rows, jobs = _jobs(spark, lambda q=q: [tuple(r) for r in b.slice(q).collect()])
+        assert _exact_repeat(b) and jobs == 0, q
+        assert rows == _fresh_rows(cubedef, grown, q), q
+    b.clear_cache()
+
+
+def test_refresh_aggregates_the_delta_on_spark_without_a_python_twin(cubedef, spark):
+    """A cached slice filtered by an op without a Python twin (``match``,
+    Java regex) takes its delta partials from Spark, and still ends up
+    holding merged rows; so does every slice when the delta exceeds
+    ``MEMO_MAX_ROWS`` and is not extracted."""
+    base = spark.createDataFrame(BASE, SCHEMA)
+    delta = spark.createDataFrame(DELTA, SCHEMA)
+    q = CubeQuery().add_axis("item").add_value("number").add_filter("place", "match", "^ital")
+    want = _fresh_rows(cubedef, base.unionByName(delta), q)
+    b = CuttingBoard(cubedef, base)
+    b.slice(q).collect()
+    b.refresh(delta)
+    d = decisions.last("refresh", context=b.decisions_context)
+    assert (d.route, d.detail["delta_from"]) == ("merged", "spark")
+    assert [tuple(r) for r in b.slice(q).collect()] == want and _exact_repeat(b)
+    b.clear_cache()
+
+    small = CuttingBoard(cubedef, base)
+    small.MEMO_MAX_ROWS = 1  # the two-row delta is over the bound
+    q1 = CubeQuery().add_value("number")
+    small.slice(q1).collect()
+    small.refresh(delta)
+    d = decisions.last("refresh", context=small.decisions_context)
+    assert (d.route, d.detail["delta_from"]) == ("merged", "spark")
+    assert [tuple(r) for r in small.slice(q1).collect()] == [(358,)]
+    assert _exact_repeat(small)
+    small.clear_cache()
+
+
+def test_slice_planned_before_refresh_does_not_store_stale_rows(cubedef, spark):
+    """A slice planned before a refresh and collected after it returns
+    the rows it was planned over, but must not store them over the
+    refreshed entry (every later read served the pre-refresh rows)."""
+    base = spark.createDataFrame(BASE, SCHEMA)
+    delta = spark.createDataFrame(DELTA, SCHEMA)
+    b = CuttingBoard(cubedef, base)
+    q = CubeQuery().add_axis("item").add_value("number").add_value("n").add_filter(
+        "place", "eq", "italy"
+    )
+    s = b.slice(q)
+    b.refresh(delta)
+    s.collect()
+    got = {r["item"]: (r["number"], r["n"]) for r in b.slice(q).collect()}
+    assert got == {"apples": (170, 3), "pears": (101, 1)}
+    b.clear_cache()
+
+
+def test_refresh_under_concurrent_reads_stores_no_stale_rows(cubedef, spark):
+    """Readers slicing and collecting on one board while refreshes land:
+    a slice planned before a refresh may finish after it, and must neither
+    store its rows over the refreshed entry nor be merged twice. Once the
+    readers stop, every query equals a fresh board over all the rows."""
+    import sys
+    import threading
+
+    base = spark.createDataFrame(BASE, SCHEMA)
+    b = CuttingBoard(cubedef, base)
+    queries = [
+        CubeQuery().add_axis("month").add_axis("item").add_value("number").add_value("n"),
+        CubeQuery().add_axis("item").add_value("number"),
+        CubeQuery().add_value("n"),
+        CubeQuery().add_axis("place").add_value("n").add_filter("item", "eq", "apples"),
+    ]
+    stop = threading.Event()
+    errors = []
+
+    def reader(i):
+        try:
+            while not stop.is_set():
+                b.slice(queries[i % len(queries)]).collect()
+        except Exception as e:  # pragma: no cover
+            errors.append(e)
+
+    grown = base
+    threads = [threading.Thread(target=reader, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for t in threads:
+            t.start()
+        for i in range(4):
+            delta = spark.createDataFrame(
+                [(dt.date(2010, 1 + i % 2, 1), ("apples", "plums")[i % 2], "spain", 10 + i)],
+                SCHEMA,
+            )
+            b.refresh(delta)
+            grown = grown.unionByName(delta)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=120)
+        sys.setswitchinterval(interval)
+    assert not errors and not any(t.is_alive() for t in threads)
+    for q in queries:
+        assert [tuple(r) for r in b.slice(q).collect()] == _fresh_rows(cubedef, grown, q), q
     b.clear_cache()
 
 

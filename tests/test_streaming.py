@@ -189,12 +189,23 @@ def test_streaming_incremental_cube_maintenance(spark, tmpdir):
     finally:
         sq.stop()
 
-    s = board.slice(q)
-    # the maintained frame answers: no recompute over the base files
+    sc = spark.sparkContext
+    sc.setJobGroup("maintained-read", "read a maintained slice")
+    try:
+        s = board.slice(q)
+        got = [tuple(r) for r in s.collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the maintained rows answer: an exact hit, no recompute and no job
     d = decisions.last("cold_fold", context=board.decisions_context)
-    assert (d.route, d.detail["served_from"]) == ("spark", "frame")
+    assert (d.route, d.detail["kind"]) == ("local_warm", "exact_repeat")
+    assert list(sc.statusTracker().getJobIdsForGroup("maintained-read")) == []
     want_total = sum(r[4] for r in _rows())
     assert s["click"].record == {"total": pytest.approx(want_total), "n": 40}
+    fresh = CuttingBoard(
+        cd, spark.read.schema(SCHEMA).parquet(data_dir), cache_results=False
+    ).slice(q)
+    assert got == [tuple(r) for r in fresh.collect()]  # integral sums: exact
 
 
 def test_streaming_asof_join_equals_batch(spark, tmpdir):
