@@ -185,20 +185,30 @@ class CuttingBoard:
         self.decisions_context = f"{cubedef.title or 'board'}@{id(self):x}"
         self._lattices: list = []  # registered CubeLattice materializations
         self._lock = threading.RLock()
-        # COLD small-table path: when eager_snapshot_rows is set and the
-        # table fits under it, label values and measure inputs are
-        # extracted Spark-side ONCE (construction-time, like the
-        # reference's preloaded dataset, /root/reference/bacon/
+        # COLD small-table path: when eager_snapshot_rows is set on a
+        # caching board and the table fits under it, label values and
+        # measure inputs are extracted Spark-side ONCE (construction-time,
+        # like the reference's preloaded dataset, /root/reference/bacon/
         # cutting.py:122-135) and FIRST-hit aggregations fold them
         # driver-side via the accumulators' ``py_agg`` twins — closing
-        # Spark's ~0.3 s job-launch floor on point queries over small
-        # dimension tables. Bounded by construction: a table over the cap
-        # disables the path (one capped probe, never an unbounded
-        # collect), so at 100 TB only genuinely small cubes qualify.
+        # Spark's job-launch floor on cold slices of small tables and of
+        # the star board's full view (sources/star.py). Bounded by
+        # construction: a table over the cap disables the path (one capped
+        # probe, never an unbounded collect), so at 100 TB only genuinely
+        # small cubes qualify. Logged as a ``snapshot`` decision.
         self._snap_cap = eager_snapshot_rows
-        self._snap = (
-            self._extract(df, eager_snapshot_rows) if eager_snapshot_rows else None
-        )
+        self._snap = None
+        if eager_snapshot_rows and cache_results:
+            self._snap = self._extract(df, eager_snapshot_rows)
+            built = self._snap is not None
+            decisions.record(
+                "snapshot",
+                "built" if built else "over_cap",
+                context=self.decisions_context,
+                # over the cap, the probe stops at cap + 1 rows
+                rows=len(self._snap.rows) if built else eager_snapshot_rows + 1,
+                cap=eager_snapshot_rows,
+            )
 
     def register_lattice(self, lattice) -> None:
         """Register a precomputed CubeLattice (operators/lattice.py) as a
@@ -223,10 +233,9 @@ class CuttingBoard:
                 made = self._serve_rows(query, cq, schema, rows, added, reagg, gen)
                 if made is not None:
                     return made
-        if self.cache_results:
-            made = self._local_cold(query, gen)
-            if made is not None:
-                return made
+        made = self._local_cold(query, gen)
+        if made is not None:
+            return made
         # no driver-side form answers exactly: this query takes a Spark
         # plan, over a cached frame, a lattice grain or the base table
         df, served_from = self._plan(query, hits, gen)
@@ -666,8 +675,10 @@ class CuttingBoard:
         One Spark job extracts the delta (``_extract``, bounded by
         ``MEMO_MAX_ROWS``): each slice folds its partials from it, and the
         eager snapshot appends it. Over the bound, or for a slice the fold
-        cannot answer, Spark aggregates the delta instead (and the eager
-        snapshot is dropped). Every kept slice then holds rows, so its
+        cannot answer, Spark aggregates the delta instead. The snapshot is
+        dropped when the delta was not extracted or would take it over its
+        cap (a ``snapshot`` ``dropped`` decision with the ``reason``).
+        Every kept slice then holds rows, so its
         re-reads launch no job. Each slice's fate is logged as a
         ``refresh`` decision: ``merged`` (``delta_from`` snapshot or
         spark) or ``evicted`` (``reason``). The generation bump keeps a
@@ -707,8 +718,19 @@ class CuttingBoard:
                     lat.unpersist()
             snap = self._snap
             if snap is not None:
-                fits = delta is not None and len(snap.rows) + len(delta.rows) <= self._snap_cap
-                self._snap = snap._replace(rows=snap.rows + delta.rows) if fits else None
+                grown = None if delta is None else len(snap.rows) + len(delta.rows)
+                if grown is not None and grown <= self._snap_cap:
+                    self._snap = snap._replace(rows=snap.rows + delta.rows)
+                else:
+                    self._snap = None
+                    decisions.record(
+                        "snapshot",
+                        "dropped",
+                        context=self.decisions_context,
+                        reason="delta_not_extracted" if delta is None else "over_cap",
+                        rows=grown,
+                        cap=self._snap_cap,
+                    )
             for key, (cq, frame, schema, rows) in list(self._cache.items()):
                 entry, detail = self._merge_entry(cq, frame, schema, rows, delta, delta_df)
                 if frame is not None:

@@ -15,9 +15,16 @@ broadcast here (driver-defined fixtures keep it ~1/4 the fact rows) and
 expose ``join_orders_broadcast=False`` to switch to a shuffle join that AQE
 can convert as it sees fit.
 
+Cold slices: a ``StarCuttingBoard`` that caches results extracts one
+snapshot of the full view at construction (one collect, capped at
+``CuttingBoard.MEMO_MAX_ROWS`` rows) and folds first hits from it on the
+driver, as the reference answers from its preloaded dataset. Over the cap,
+each cold slice joins only the tables it references (``fact_for_cube``).
+
 Freshness: a ``StarTables`` reads each table once, so a board's file
-listings are fixed when it is constructed, as its base frame's already are;
-``refresh(..., grow_base=False)`` re-reads them.
+listings are fixed when it is constructed, as its base frame's and its
+snapshot's already are; ``refresh`` appends the delta to the snapshot and
+``refresh(..., grow_base=False)`` also re-reads the tables.
 """
 
 from __future__ import annotations
@@ -286,23 +293,41 @@ def fact_for_cube(tables: StarTables, cubedef, query) -> DataFrame:
     labels = [cubedef.get_label(n) for n in (*query.axes, *(f[0] for f in query.filters))]
     measures = [cubedef.get_value(v) for v in query.values]
     # a label or measure reads its ``_expr``, plus the ``_base`` column a
-    # date-hierarchy label truncates; a ratio or group accumulator its own
-    exprs = [getattr(o, a, None) for o in labels + measures for a in ("_expr", "_base")]
+    # date-hierarchy label truncates; a ratio or group accumulator its own.
+    # A ratio's ``_expr`` is a per-record callable over its num/den, which
+    # are collected already: reading it would keep every join.
+    exprs = [getattr(o, "_base", None) for o in labels + measures]
+    exprs += [
+        o._expr
+        for o in labels + measures
+        if not (callable(o._expr) and hasattr(getattr(o, "acc", None), "num"))
+    ]
     exprs += [getattr(m.acc, a, None) for m in measures for a in ("num", "den", "label_expr")]
     return sales_fact_for(tables, referenced_prefixes([e for e in exprs if e is not None]))
 
 
 class StarCuttingBoard:
-    """CuttingBoard over the star schema with automatic join culling: each
-    query gets the minimal fact view for the labels/measures/filters it
-    references (see fact_for_cube). Everything else — slice cache, reuse
-    strategies, ordering — is inherited.
+    """CuttingBoard over the star schema. Everything — slice cache, reuse
+    strategies, ordering — is inherited; what differs is how a cold slice
+    is answered.
+
+    With ``cache_results`` the board extracts the full view's label values
+    and measure inputs once, at construction (one collect behind a
+    ``limit(MEMO_MAX_ROWS + 1)`` probe: seven Spark jobs, one per
+    broadcast dimension and the collect), and folds cold slices from that
+    snapshot on the driver with no job. A view over ``MEMO_MAX_ROWS`` rows
+    keeps no snapshot, and neither does a non-caching board: each cold
+    slice then gets the minimal fact view for the labels, measures and
+    filters it references (join culling, see ``fact_for_cube``), as does a
+    query the fold cannot answer (``match``/``nmatch`` filters). The
+    ``snapshot`` decision records which way the board went.
 
     The board reads each table once and builds each culled view once, in
     one ``StarTables`` for its life. So its file listings are fixed when it
-    is constructed, as its base frame's already are. ``refresh`` folds the
-    delta into every view; ``refresh(..., grow_base=False)`` re-reads the
-    tables instead."""
+    is constructed, as its base frame's and snapshot's already are.
+    ``refresh`` folds the delta (full-view rows) into every view and the
+    snapshot; ``refresh(..., grow_base=False)`` re-reads the tables
+    instead of growing the views."""
 
     def __new__(cls, cubedef, spark: SparkSession, sf_dir: str, cache_results: bool = True):
         from ..engine import CuttingBoard
@@ -323,7 +348,12 @@ class StarCuttingBoard:
                 super().refresh(delta_df, grow_base)
 
         full = sales_fact_for(tables, _PREFIXES)
-        return _Board(cubedef, full, cache_results=cache_results)
+        return _Board(
+            cubedef,
+            full,
+            cache_results=cache_results,
+            eager_snapshot_rows=CuttingBoard.MEMO_MAX_ROWS,
+        )
 
 
 def events_cubedef():

@@ -35,6 +35,7 @@ from bacon_spark.accumulators import (
     RatioSum,
 )
 from bacon_spark.cubedef import RatioMeasure
+from bacon_spark.operators import decisions
 
 
 @pytest.fixture(scope="module")
@@ -174,6 +175,55 @@ def test_cap_exceeded_disables_and_falls_back(cd, frame):
     q = CubeQuery().add_axis("h").add_value("s")
     _assert_same(b.slice(q).collect(), ref.slice(q).collect(), "fallback")
     assert b.local_hits == 0
+
+
+def test_non_caching_board_extracts_no_snapshot(cd, frame, spark):
+    """Only a caching board folds its snapshot, so a board that does not
+    cache extracts none: neither construction nor a refresh launches a
+    job."""
+    delta = spark.createDataFrame(
+        [("g9", "h9", 9, 5.0, 1.0, "EUR")],
+        "g string, h string, d long, num double, den double, cur string",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("non-caching-snapshot", "build and refresh a non-caching board")
+    try:
+        b = CuttingBoard(cd, frame, cache_results=False, eager_snapshot_rows=10_000)
+        b.refresh(delta)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("non-caching-snapshot")) == []
+    assert b._snap is None
+    assert decisions.last("snapshot", context=b.decisions_context) is None
+
+
+def test_snapshot_decisions_say_why_a_board_has_none(cd, frame, spark):
+    """Construction records whether the snapshot was built or the frame
+    was over the cap; a refresh that drops it records why."""
+
+    def last(board):
+        d = decisions.last("snapshot", context=board.decisions_context)
+        return d.route, d.detail
+
+    delta = spark.createDataFrame(
+        [("g9", "h9", 9, 5.0, 1.0, "EUR")],
+        "g string, h string, d long, num double, den double, cur string",
+    )
+    full = CuttingBoard(cd, frame, eager_snapshot_rows=400)
+    assert last(full) == ("built", {"rows": 400, "cap": 400})
+    over = CuttingBoard(cd, frame, eager_snapshot_rows=10)
+    assert last(over) == ("over_cap", {"rows": 11, "cap": 10})
+    full.refresh(delta)  # 401 rows
+    assert full._snap is None
+    assert last(full) == ("dropped", {"reason": "over_cap", "rows": 401, "cap": 400})
+    unbounded = CuttingBoard(cd, frame, eager_snapshot_rows=10_000)
+    unbounded.MEMO_MAX_ROWS = 0  # the delta is over the extraction bound
+    unbounded.refresh(delta)
+    assert unbounded._snap is None
+    assert last(unbounded) == (
+        "dropped",
+        {"reason": "delta_not_extracted", "rows": None, "cap": 10_000},
+    )
 
 
 def test_ops_without_python_twin_fall_through(cd, frame):

@@ -291,27 +291,41 @@ def test_count_rollup_reuse(cubedef, spark):
 # --- keyset pagination ------------------------------------------------------
 
 
-def test_star_board_refresh_reaches_cold_slices(spark, sf_dir, tmp_path):
-    """A StarCuttingBoard plans cold slices over culled fact views, not its
-    base frame: every view, kept or built later, must absorb a refreshed
-    delta, and a ``grow_base=False`` refresh re-reads the tables."""
+@pytest.mark.parametrize("cap", [None, 1_000], ids=["snapshot", "over_cap"])
+def test_star_board_refresh_reaches_cold_slices(spark, sf_dir, tmp_path, cap, monkeypatch):
+    """A StarCuttingBoard folds cold slices from its snapshot or, over the
+    cap (``MEMO_MAX_ROWS`` patched to *cap*, under sf0.001's 6,000 lineitem
+    rows and over the delta), plans them over culled fact views, not its
+    base frame: the snapshot and every view, kept or built later, must
+    absorb a refreshed delta, and a ``grow_base=False`` refresh re-reads
+    the tables."""
     import shutil
 
     from bacon_spark.sources.star import StarCuttingBoard, sales_cubedef, sales_fact
+
+    if cap is not None:
+        monkeypatch.setattr(CuttingBoard, "MEMO_MAX_ROWS", cap)
+    cold = "spark" if cap else "local_cold"
 
     def counts(board, label):
         q = CubeQuery().add_axis(label).add_value("n_items")
         return {r[label]: r["n_items"] for r in board.slice(q).rows()}
 
+    def route(board):
+        return decisions.last("cold_fold", context=board.decisions_context).route
+
     delta = sales_fact(spark, sf_dir).filter("l_orderkey <= 40")
     grown = sales_fact(spark, sf_dir).unionByName(delta)
     want = CuttingBoard(sales_cubedef(), grown, cache_results=False)
     board = StarCuttingBoard(sales_cubedef(), spark, sf_dir)
+    assert (board._snap is None) == (cap is not None)
     counts(board, "orderstatus")  # builds the lineitem+orders view
+    assert route(board) == cold
     board.refresh(delta)
     # a new view, the kept one, and a new view with every dimension
     for label in ("returnflag", "orderpriority", "region"):
         assert counts(board, label) == counts(want, label), label
+        assert route(board) == cold
 
     # the delta's lineitem rows land in the board's own storage
     data = tmp_path / "sf"
@@ -326,6 +340,7 @@ def test_star_board_refresh_reaches_cold_slices(spark, sf_dir, tmp_path):
     board.refresh(delta, grow_base=False)
     for label in ("returnflag", "orderpriority"):
         assert counts(board, label) == counts(want, label), label
+        assert route(board) == cold
     board.clear_cache()
 
 

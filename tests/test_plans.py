@@ -93,6 +93,15 @@ def test_join_culling(spark):
     assert plan.count("Join") == 1, plan
     assert fact.groupBy("o_orderdate").count().limit(1).collect()
 
+    # a ratio measure reads its num/den, not its per-record callable: a
+    # (region, discount_rate) query joins the chain to region and no more
+    from bacon_spark.sources.star import sales_cubedef
+
+    tables = StarTables(spark, SF)
+    qr = CubeQuery().add_axis("region").add_value("discount_rate")
+    fact_for_cube(tables, sales_cubedef(), qr)
+    assert list(tables._facts) == [(("orders", "customer", "nation", "region"), True)]
+
     # q02's plan keeps the chain to region but culls part+supplier
     from bacon_spark.queries import QUERIES
 
@@ -151,16 +160,39 @@ _JOIN_SET_AXES = [
 ]
 
 
-def test_star_board_plans_cold_slices_without_jobs(spark):
+#: ``MEMO_MAX_ROWS`` for a star board that folds its snapshot (the class
+#: default) and for one over the cap (sf0.001 has 6,000 lineitem rows)
+_STAR_CAPS = [None, 1_000]
+
+
+def _star_board(spark, sf_dir, cap, monkeypatch):
+    """A caching StarCuttingBoard that keeps a snapshot (*cap* None) or,
+    with ``MEMO_MAX_ROWS`` patched to *cap*, is over the cap and plans
+    cold slices over culled views."""
+    from bacon_spark.engine import CuttingBoard
+    from bacon_spark.operators import decisions
+    from bacon_spark.sources.star import StarCuttingBoard, sales_cubedef
+
+    if cap is not None:
+        monkeypatch.setattr(CuttingBoard, "MEMO_MAX_ROWS", cap)
+    board = StarCuttingBoard(sales_cubedef(), spark, sf_dir)
+    route = decisions.last("snapshot", context=board.decisions_context).route
+    assert route == ("built" if cap is None else "over_cap")
+    assert (board._snap is None) == (cap is not None)
+    return board
+
+
+@pytest.mark.parametrize("cap", _STAR_CAPS, ids=["snapshot", "over_cap"])
+def test_star_board_plans_cold_slices_without_jobs(spark, cap, monkeypatch):
     """A board reads each table once, at construction: planning a cold
     slice on a new join set launches no Spark job (each parquet read
-    infers its schema in one). Threads slicing distinct join sets on one
-    board get the serial rows."""
+    infers its schema in one), and folding it from the snapshot launches
+    none either. Threads slicing distinct join sets on one board get the
+    serial rows."""
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
     from bacon_spark import CubeQuery
-    from bacon_spark.sources.star import StarCuttingBoard, sales_cubedef
 
     def query(axes):
         q = CubeQuery()
@@ -170,7 +202,7 @@ def test_star_board_plans_cold_slices_without_jobs(spark):
 
     queries = [query(axes) for axes in _JOIN_SET_AXES]
     sc = spark.sparkContext
-    board = StarCuttingBoard(sales_cubedef(), spark, SF)
+    board = _star_board(spark, SF, cap, monkeypatch)
     sc.setJobGroup("star-board-plan", "plan cold slices")
     try:
         for q in queries[:3]:
@@ -181,7 +213,7 @@ def test_star_board_plans_cold_slices_without_jobs(spark):
 
     serial = [_slice_rows(board, q) for q in queries]
     assert all(serial)
-    shared = StarCuttingBoard(sales_cubedef(), spark, SF)
+    shared = _star_board(spark, SF, cap, monkeypatch)
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-4)
     try:
@@ -190,6 +222,59 @@ def test_star_board_plans_cold_slices_without_jobs(spark):
     finally:
         sys.setswitchinterval(interval)
     assert got == serial
+
+
+def test_star_board_folds_cold_navigation_without_jobs(spark):
+    """A caching star board extracts its full view once, at construction,
+    and folds nav-shaped cold slices from it: every measure, a date label
+    with no other orders label, eq/ne/in filters and a grand total launch
+    no job and answer as the unculled view does on Spark."""
+    from bacon_spark import CubeQuery
+    from bacon_spark.engine import CuttingBoard
+    from bacon_spark.operators import decisions
+    from bacon_spark.sources.star import StarCuttingBoard, sales_cubedef, sales_fact
+
+    cd = sales_cubedef()
+    measures = [m.name for m in cd.measures]
+    assert len(measures) == 10
+    board = StarCuttingBoard(cd, spark, SF)
+    ref = CuttingBoard(sales_cubedef(), sales_fact(spark, SF), cache_results=False)
+
+    def query(axes, values, filters=()):
+        q = CubeQuery()
+        for a in axes:
+            q = q.add_axis(a)
+        for v in values:
+            q = q.add_value(v)
+        for f in filters:
+            q = q.add_filter(*f)
+        return q
+
+    queries = [
+        query(["region"], measures),
+        query(["order_day"], ["quantity", "n_items"]),
+        query(["nation"], ["revenue", "discount_rate"], [("region", "eq", "ASIA")]),
+        query(["linestatus"], ["charge", "avg_quantity"], [("returnflag", "ne", "R")]),
+        query(
+            ["brand", "orderpriority"],
+            ["n_parts", "max_price"],
+            [("mktsegment", "in", ["BUILDING", "MACHINERY"])],
+        ),
+        query([], measures),
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("star-board-fold", "fold cold slices")
+    try:
+        got = []
+        for q in queries:
+            got.append(_slice_rows(board, q))
+            d = decisions.last("cold_fold", context=board.decisions_context)
+            assert d.route == "local_cold", (q, d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("star-board-fold")) == []
+    for q, rows in zip(queries, got):
+        assert rows and rows == _slice_rows(ref, q), q
 
 
 def test_q40_no_cartesian_or_bnlj(spark):
