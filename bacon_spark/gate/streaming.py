@@ -7,6 +7,12 @@ registration registry and helpers live in gate/_base.py.
 """
 
 from ._base import *  # noqa: F401,F403
+from ..utils.conf import conf_override
+
+#: skip the trailing no-data micro-batch: a complete/update-mode memory
+#: sink (or a join whose emission has no watermark-gated flush) would
+#: only recompute and re-emit the same state in it
+_NO_DATA_BATCHES_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 @query(
@@ -155,12 +161,8 @@ def q44_streaming_tumbling(spark, sf_dir):
     # complete mode re-emits full state per batch; the memory sink keeps
     # only the latest emission, so the final table is the merged state.
     # Skip the trailing no-data batch (nothing to flush, see q62).
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_override(spark, _NO_DATA_BATCHES_OFF):
         run_stream_to_memory(out, "q44_stream", mode="complete")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
     return spark.table("q44_stream")
 
 
@@ -236,7 +238,7 @@ def q54_incremental_maintenance(spark, sf_dir):
     # of leaking one events copy per run. Measured flat-after-warmup at
     # sf0.1 (4 interleaved pairs, hashes identical); the cleanup is the
     # point at sweep SFs, where the leaked copy is GBs of tmpfs.
-    from ..streaming.windows import scratch_checkpoint_conf, scratch_dir
+    from ..streaming.windows import _SCRATCH_STREAM_CONFS, scratch_dir
 
     d = scratch_dir("bacon_ivm_")
     data, ckpt = os.path.join(d, "data"), os.path.join(d, "ckpt")
@@ -251,7 +253,7 @@ def q54_incremental_maintenance(spark, sf_dir):
 
         b = CuttingBoard(cd, spark.read.parquet(data), snapshot_cache=True)
         stream = spark.readStream.schema(spark.read.parquet(data).schema).parquet(data)
-        with scratch_checkpoint_conf(spark):  # run-scoped scratch ckpt
+        with conf_override(spark, _SCRATCH_STREAM_CONFS):  # run-scoped scratch ckpt
             sq = stream_into_board(stream, b, ckpt)
         try:
             sq.processAllAvailable()  # catch up before priming (consistency contract)
@@ -323,12 +325,8 @@ def q62_streaming_oracle(spark, sf_dir):
     # no-data micro-batch would recompute and re-emit all of it for
     # nothing (no watermark-gated flush to trigger here), so skip it:
     # one data batch total
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_override(spark, _NO_DATA_BATCHES_OFF):
         run_stream_to_memory(out, "q62_stream", mode="complete")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
     return spark.table("q62_stream")
 
 
@@ -623,18 +621,14 @@ def q67_streaming_overlap_join(spark, sf_dir):
         "e_lo", "e_up", "p_lo", "p_up",
         on=["user_id"], prefix="r_", delay="35 days", shards=shards,
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     # symmetric-join emission happens in the batch where the second side
     # arrives — the trailing no-data micro-batch emits nothing here (no
     # watermark-gated flush like the as-of queries), so skip it: ONE
     # trigger total
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_override(spark, _NO_DATA_BATCHES_OFF):
         run_stream_to_memory(
             out, "q67_stream", mode="append", state_partitions=shards
         )
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
     return spark.table("q67_stream").select(
         "user_id",
         F.date_format("d", "yyyy-MM-dd").alias("day"),
@@ -1104,7 +1098,7 @@ def q141_streaming_cdc_upsert(spark, sf_dir):
 
     from ..operators.maintenance import manifest_read
     from ..streaming.sink import idempotent_batch_writer
-    from ..streaming.windows import scratch_checkpoint_conf, scratch_dir
+    from ..streaming.windows import _SCRATCH_STREAM_CONFS, scratch_dir
 
     src = _stage_q141(spark, sf_dir)
     out = scratch_dir("bacon_q141out_")
@@ -1117,7 +1111,7 @@ def q141_streaming_cdc_upsert(spark, sf_dir):
             .parquet(src)
         )
         writer = idempotent_batch_writer(out)
-        with scratch_checkpoint_conf(spark):  # per-run scratch ckpt
+        with conf_override(spark, _SCRATCH_STREAM_CONFS):  # per-run scratch ckpt
             q = (
                 stream.writeStream.foreachBatch(writer)
                 .option("checkpointLocation", ckpt)
@@ -1232,12 +1226,8 @@ def q167_streaming_distinct_sketch(spark, sf_dir):
     reg_stream = _sk.hll_registers(
         stream.select("window_start", "user_id"), "user_id", ["window_start"]
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_override(spark, _NO_DATA_BATCHES_OFF):
         run_stream_to_memory(reg_stream, "q167_stream", mode="complete")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
     reg = spark.table("q167_stream")
     est = _sk.hll_estimate(reg, ["window_start"]).select(
         "window_start", "buckets_used", F.col("hll_estimate").alias("approx_users")
@@ -1339,12 +1329,8 @@ def q176_streaming_quantile_sketch(spark, sf_dir):
     hist_stream = _sk.hist_sketch(
         stream.select("window_start", "v"), "v", ["window_start"]
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_override(spark, _NO_DATA_BATCHES_OFF):
         run_stream_to_memory(hist_stream, "q176_stream", mode="complete")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
     hist = spark.table("q176_stream")
     est = _sk.hist_quantiles(hist, (50, 95, 99), ["window_start"])
 
@@ -1437,9 +1423,7 @@ def q183_streaming_funnel(spark, sf_dir):
     snaps = streaming_funnel_steps(
         stream, steps, horizon="7 days", watermark="3650 days"
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_override(spark, _NO_DATA_BATCHES_OFF):
         # width 16 (r13, measured): the per-user Python-state fold is
         # bound by per-trigger Arrow round-trips, not store commits —
         # unlike the JVM-state streams (q44/q64/q99 measured WORSE at
@@ -1452,8 +1436,6 @@ def q183_streaming_funnel(spark, sf_dir):
         # raise, so 16 is a no-op (and the 8-core number only holds)
         # when the session runs with >16 shuffle partitions.
         run_stream_to_memory(snaps, "q183_stream", mode="update", state_partitions=16)
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
     latest = latest_funnel_steps(spark.table("q183_stream"))
     return funnel_counts_from_steps(latest, steps)
 
@@ -1489,12 +1471,8 @@ def q188_streaming_funnel_sharded(spark, sf_dir):
     snaps = streaming_funnel_steps_sharded(
         stream, steps, horizon="7 days", watermark="3650 days", shards=64
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_override(spark, _NO_DATA_BATCHES_OFF):
         run_stream_to_memory(snaps, "q188_stream", mode="update")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
     latest = latest_funnel_steps(spark.table("q188_stream"))
     return funnel_counts_from_steps(latest, steps)
 
@@ -1514,9 +1492,9 @@ def q189_streaming_funnel_auto(spark, sf_dir):
     sharded form above it — the auto-salt decision pattern
     (operators/scale.auto_salt_join + key_skew_stats) applied to
     stateful-operator keying. Both branches are oracle-equal (q183 == q188), so
-    the hash is route-invariant; the chosen route is surfaced on the
-    result frame as .funnel_route and pinned at both cardinalities in
-    tests/test_stream_state.py. Same staged two-file input, same
+    the hash is route-invariant; the chosen route is recorded as
+    operators.decisions.last("funnel") and pinned at both cardinalities
+    in tests/test_stream_state.py. Same staged two-file input, same
     update-mode sink fold, same DuckDB conditional-min-chain oracle."""
     from ..streaming.funnel import (
         funnel_counts_from_steps,
@@ -1543,9 +1521,7 @@ def q189_streaming_funnel_auto(spark, sf_dir):
         # per-query scan — repeat funnel queries pay zero extra jobs
         estimate_path=d,
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with conf_override(spark, _NO_DATA_BATCHES_OFF):
         # width 16 (r13): same measured trade as q183 — the per-user
         # route (taken at bench cardinalities) is Arrow-round-trip
         # bound (A/B median 3.22 -> 2.78 s, every pair), and the
@@ -1553,7 +1529,5 @@ def q189_streaming_funnel_auto(spark, sf_dir):
         # partitions instead of 8 (the 8-shard q188 form, where width
         # beyond the key count buys nothing, keeps the default).
         run_stream_to_memory(snaps, "q189_stream", mode="update", state_partitions=16)
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
     latest = latest_funnel_steps(spark.table("q189_stream"))
     return funnel_counts_from_steps(latest, steps)

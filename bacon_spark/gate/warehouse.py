@@ -7,6 +7,7 @@ registration registry and helpers live in gate/_base.py.
 """
 
 from ._base import *  # noqa: F401,F403
+from ..utils.conf import conf_override
 
 
 def bucketed_star_tables(spark, sf_dir: str) -> tuple[str, str]:
@@ -1178,15 +1179,12 @@ def _stats_layout_prebuilt(spark, sf_dir):
         # Spark's default parquet timestamp encoding is legacy INT96,
         # which carries NO footer min/max — write TIMESTAMP_MICROS so
         # the stats the skip relies on actually exist
-        conf = "spark.sql.parquet.outputTimestampType"
-        prev = spark.conf.get(conf)
-        spark.conf.set(conf, "TIMESTAMP_MICROS")
-        try:
+        with conf_override(
+            spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+        ):
             ev.repartitionByRange(8, F.col("ts")).sortWithinPartitions(
                 "ts"
             ).write.mode("overwrite").parquet(path)
-        finally:
-            spark.conf.set(conf, prev)
     attach_file_stats(path, ["ts"])
     return path
 

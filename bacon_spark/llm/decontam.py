@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.conf import conf_override
 from .dedup import shingles
 
 #: word n-gram size for the overlap test (8-13 in published decontamination
@@ -129,14 +130,8 @@ def contaminated_ids_bloom(
         .groupBy("word")
         .agg(F.expr("bit_or(bit)").alias("bits"))
     )
-    spark = eval_df.sparkSession
-    aqe_conf = "spark.sql.adaptive.enabled"
-    prev_aqe = spark.conf.get(aqe_conf)
-    spark.conf.set(aqe_conf, "false")
-    try:
+    with conf_override(eval_df.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
         words = words_q.collect()
-    finally:
-        spark.conf.set(aqe_conf, prev_aqe)
     bitmap = [0] * (m_bits // 64)
     for r in words:
         bitmap[r["word"]] = r["bits"]

@@ -1472,7 +1472,8 @@ def containment_pairs_routed(
     tests/test_llm_ops.py, so routing changes cost, never results. A
     parameter-mismatched index is NEVER probed — its inverted frame
     covers a different gram universe — the caller gets the inline
-    computation and ``.containment_route == "inline"`` says so.
+    computation, and ``operators.decisions.last("containment")`` records
+    route ``"inline"``.
 
     CORPUS CONTRACT (ADVICE r10): the index route answers for the corpus
     the index was BUILT over, so *docs* must be that corpus. The match
@@ -1513,7 +1514,6 @@ def containment_pairs_routed(
         out = containment_index_probe(docs.sparkSession, index_path, threshold)
     else:
         out = containment_pairs(docs, text_col, id_col, k, w, df_cap, threshold)
-    out.containment_route = route
     from ..operators import decisions
 
     decisions.record(

@@ -127,7 +127,3 @@ class TimePlotData:
         parts.append("</svg>")
         return "".join(parts)
 
-
-# Excel rendering lives in observers/excel.py (stdlib xlsx writer);
-# re-exported here for backward compatibility with round-1 imports.
-from .excel import render_excel, save_excel  # noqa: E402,F401

@@ -8,15 +8,12 @@ containment probe-vs-inline by index-manifest match
 changes cost, never results), but callers and harnesses need to see WHY
 a plan took its shape.
 
-Through round 10 the routed frames carried the decision as ad-hoc
-attributes (``.funnel_route``, ``.containment_route``). PySpark
-DataFrames accept attribute assignment, but every transformation returns
-a NEW DataFrame, so ``routed.filter(...)`` silently dropped the
-annotation. The attributes remain (back-compat, and convenient when the
-frame is consumed directly), but the durable channel is this module's
-bounded in-process log: routers :func:`record` their decision, callers
-read it back with :func:`last` / :func:`log` no matter what they did to
-the frame since.
+This module's bounded in-process log is the one channel for those
+decisions: routers :func:`record` their decision, callers read it back
+with :func:`last` / :func:`log`. Routed frames carry no route attribute:
+every DataFrame transformation returns a NEW frame, so an attribute set
+on the routed frame would be gone after ``routed.filter(...)``, while a
+log record survives whatever the caller does to the frame.
 
 Driver-side only — decisions are made on the driver while the plan is
 being built, so a plain deque (atomic appends under CPython) suffices;

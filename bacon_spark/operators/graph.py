@@ -89,11 +89,8 @@ def connected_components(
     documents left-joins this onto the full corpus and treats null as
     "its own singleton cluster").
     """
-    import os
-
     from pyspark.sql import Observation
 
-    use_agg_sig = os.environ.get("BACON_CC_SIG") == "agg"
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src") != F.col("dst"))
@@ -103,33 +100,20 @@ def connected_components(
     prev = None
     for _ in range(max_iter):
         out = _small_star(_large_star(e))
-        if not use_agg_sig:
-            # signature via observe (r14): CollectMetrics computes the
-            # (count, hash-sum) signature as rows stream INTO the eager
-            # checkpoint's materialization — still one Spark job per
-            # round, but without the separate aggregate subtree the r13
-            # form planned and scheduled per round (its partial agg +
-            # single-partition Exchange + final-agg stage are gone; the
-            # probe measured ~1 fewer job per round, A/B ahead on the
-            # CC query family). The checkpointed RDD is what the next
-            # round reads, exactly as before.
-            obs = Observation()
-            e = out.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-            ).localCheckpoint(eager=True)
-            got = obs.get
-            sig = (got["n"], got["h"])
-        else:
-            # r13 form, kept A/B-able via BACON_CC_SIG=agg: lazy
-            # checkpoint materialized by the signature aggregate
-            e = out.localCheckpoint(eager=False)
-            r = e.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-            ).collect()[0]
-            sig = (r["n"], r["h"])
+        # signature via observe: CollectMetrics computes the
+        # (count, hash-sum) signature as rows stream INTO the eager
+        # checkpoint's materialization — one Spark job per round, with
+        # no separate aggregate subtree (partial agg + single-partition
+        # Exchange + final-agg stage) planned and scheduled per round.
+        # The checkpointed RDD is what the next round reads.
+        obs = Observation()
+        e = out.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
+        ).localCheckpoint(eager=True)
+        got = obs.get
+        sig = (got["n"], got["h"])
         if sig == prev:
             break
         prev = sig

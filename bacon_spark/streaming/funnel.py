@@ -337,12 +337,10 @@ def streaming_funnel_steps_auto(
       throughput at 1M users, STREAM_BENCH_R9.json; the wrong sharded
       guess costs only coarser state granularity).
 
-    The decision is exposed on the returned frame as ``.funnel_route``
-    (``"per_user"`` / ``"sharded"``) with the estimate at
-    ``.funnel_route_users`` — convenient when the frame is consumed
-    directly — and, composition-safe (VERDICT r10 next #4), recorded in
-    the process-wide decisions log: transformations drop the attribute,
-    ``operators.decisions.last("funnel")`` survives them."""
+    The decision is recorded in the process-wide decisions log:
+    ``operators.decisions.last("funnel")`` returns route ``"per_user"`` /
+    ``"sharded"`` with the estimate as ``detail["n_users"]``, and the
+    record survives any transformation of the returned frame."""
     if n_users is None and estimate_path is not None:
         from ..operators.scale import key_cardinality_stats
 
@@ -367,8 +365,6 @@ def streaming_funnel_steps_auto(
             type_col=type_col, horizon=horizon, watermark=watermark,
             shards=shards,
         )
-    out.funnel_route = route
-    out.funnel_route_users = n_users
     from ..operators import decisions
 
     decisions.record(
@@ -376,188 +372,6 @@ def streaming_funnel_steps_auto(
         shards=(shards if route == "sharded" else None),
     )
     return out
-
-
-def _stateful_processor_base():
-    """``pyspark.sql.streaming.StatefulProcessor`` when importable, else
-    ``object`` — the ABC itself imports cleanly everywhere, but keeping
-    the seam explicit lets :class:`FunnelProcessor` unit-test its fold
-    under a stub handle in containers whose Python lacks
-    transformWithState's runtime deps (protobuf state-server protocol)."""
-    try:
-        from pyspark.sql.streaming import StatefulProcessor
-
-        return StatefulProcessor
-    except ImportError:  # pragma: no cover - depends on container
-        return object
-
-
-class FunnelProcessor(_stateful_processor_base()):
-    """The ordered-funnel fold as a Spark 4 ``StatefulProcessor``
-    (:func:`streaming_funnel_steps_tws`): one named ValueState slot of
-    k+1 longs per funnel ENTRANT (-1 = unset), the same conditional-min
-    chain / (ts, step-index) tie-break / emit-on-change contract as the
-    ``applyInPandasWithState`` forms. A plain Python class on purpose:
-    the fold runs identically under a stub handle
-    (tests/test_stream_state.py drives it batch-by-batch against the
-    batch funnel without a state server), and under Spark's real
-    transformWithState runtime wherever its protobuf dependency exists."""
-
-    def __init__(
-        self,
-        steps: tuple[str, ...],
-        ts_col: str = "ts",
-        user_col: str = "user_id",
-        type_col: str = "event_type",
-        horizon: str = "7 days",
-    ):
-        self._k = len(steps)
-        self._step_ix = {s: i for i, s in enumerate(steps)}
-        self._cols = (ts_col, user_col, type_col)
-        self._hz = _horizon_us(horizon)
-        self._state_schema = (
-            ", ".join(f"t{i} long" for i in range(self._k)) + ", upd long"
-        )
-
-    def init(self, handle):
-        self._st = handle.getValueState("funnel", self._state_schema)
-
-    def handleInputRows(self, key, rows, timerValues):
-        k, hz = self._k, self._hz
-        ts_col, user_col, type_col = self._cols
-        if self._st.exists():
-            got = tuple(self._st.get())
-            t = [None if v == -1 else v for v in got[:k]]
-            upd = got[k]
-        else:
-            t, upd = [None] * k, 0
-        evs = []
-        for pdf in rows:
-            for typ, ts in zip(pdf[type_col], pdf[ts_col]):
-                i = self._step_ix.get(typ)
-                if i is None or pd.isna(ts):
-                    continue
-                evs.append((int(pd.Timestamp(ts).value // 1000), i))
-        # same in-batch (ts, step-index) order + tie-break as the
-        # applyInPandasWithState forms
-        evs.sort()
-        before = tuple(t)
-        for us, i in evs:
-            if i == 0:
-                if t[0] is None or us < t[0]:
-                    t[0] = us
-            else:
-                prev = t[i - 1]
-                if prev is not None and t[i] is None and prev <= us <= prev + hz:
-                    t[i] = us
-        if tuple(t) == before:
-            return  # no advance: no state write, no emission
-        upd += 1
-        self._st.update(tuple(-1 if v is None else v for v in t) + (upd,))
-        yield pd.DataFrame(
-            {
-                user_col: pd.array([key[0]], dtype="int64"),
-                **{
-                    f"t{i}": [
-                        pd.Timestamp(t[i], unit="us") if t[i] is not None else pd.NaT
-                    ]
-                    for i in range(k)
-                },
-                "upd": pd.array([upd], dtype="int64"),
-            }
-        )
-
-    def close(self):
-        pass
-
-
-def streaming_funnel_steps_tws(
-    events: DataFrame,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    horizon: str = "7 days",
-    watermark: str = "30 days",
-) -> DataFrame:
-    """EXPERIMENTAL: :func:`streaming_funnel_steps` on Spark 4's
-    ``transformWithState`` operator (``transformWithStateInPandas`` + a
-    ``StatefulProcessor``) instead of ``applyInPandasWithState`` —
-    identical fold, identical emit-on-change/entrant-bounded contract,
-    interchangeable output.
-
-    Experimental because its end-to-end path has only ever run where its
-    runtime dependency exists: the operator's Python state server speaks
-    a protobuf protocol, so the environment needs the pure-Python
-    ``protobuf`` package (``pip install protobuf`` — no compiled parts
-    required) plus Spark's RocksDB state-store provider (bundled with
-    Spark 4; selected automatically by the operator). Bootstrap to
-    verify: install protobuf, then run
-    ``pytest tests/test_stream_state.py -k tws`` — the end-to-end test
-    un-skips and asserts equality with the batch funnel and the per-user
-    streaming form. Without protobuf this function raises ImportError at
-    build time (below) naming the dependency; the two
-    ``applyInPandasWithState`` forms (:func:`streaming_funnel_steps`,
-    :func:`streaming_funnel_steps_sharded`, routed by
-    :func:`streaming_funnel_steps_auto`) are the supported paths and
-    share the fold logic verbatim.
-
-    Why a third form: transformWithState is the forward-looking stateful
-    API — typed named state slots (value/list/map), event- and
-    processing-time timers, per-state TTL, and it runs on the RocksDB
-    state-store provider (required), which is also what a production
-    deployment sizes for at funnel-scale state (streaming/state.py's
-    crossover: RocksDB wins above ~50k state rows — any real funnel).
-    This variant keeps the engine on the supported API as
-    applyInPandasWithState ages out, and its timer/TTL surface is where
-    per-user funnel expiry would land if a deployment needed it (the
-    other two forms use NoTimeout).
-
-    State is one named ValueState slot of k+1 longs per ENTRANT (-1 =
-    unset step; no state row until a user's step-0 event arrives, no
-    write or emission on a no-advance batch) — the same bound as the
-    per-user form. The fold, ordering, and tie-breaks live in
-    :class:`FunnelProcessor` and are shared verbatim, so cross-batch
-    equality with batch q178 holds under the same per-user
-    arrival-order assumption. tests/test_stream_state.py drives the
-    processor batch-by-batch under a stub handle against the batch
-    funnel (runs everywhere), and end-to-end under the real
-    transformWithState runtime where its protobuf state-server
-    dependency is installed (importorskip-gated; this container lacks
-    it)."""
-    # Fail at build time with the missing dependency NAMED (ADVICE r9):
-    # the StatefulProcessor ABC imports everywhere, but the state-server
-    # protocol the operator speaks at runtime is protobuf-generated —
-    # without google.protobuf the query would die mid-stream with an
-    # opaque worker error instead of saying what to install.
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithState requires google.protobuf (the Spark "
-            "state-server protocol); install `protobuf` (pure Python) "
-            "or use streaming_funnel_steps / streaming_funnel_steps_"
-            "sharded, which have no such dependency"
-        ) from e
-    k = len(steps)
-    out_schema = (
-        f"{user_col} bigint, "
-        + ", ".join(f"t{i} timestamp" for i in range(k))
-        + ", upd bigint"
-    )
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(user_col)
-        .transformWithStateInPandas(
-            statefulProcessor=FunnelProcessor(
-                steps, ts_col=ts_col, user_col=user_col,
-                type_col=type_col, horizon=horizon,
-            ),
-            outputStructType=out_schema,
-            outputMode="update",
-            timeMode="none",
-        )
-    )
 
 
 def latest_funnel_steps(snapshots: DataFrame, user_col: str = "user_id") -> DataFrame:

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+from ..utils.conf import conf_override
+
 HDFS_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 )
@@ -76,18 +78,8 @@ def state_store_conf(
         yield None
         return
     resolved = choose_state_store_provider(provider, expected_state_rows)
-    try:
-        prev = spark.conf.get(_PROVIDER_CONF)
-    except Exception:
-        prev = None
-    spark.conf.set(_PROVIDER_CONF, resolved)
-    try:
+    with conf_override(spark, {_PROVIDER_CONF: resolved}):
         yield resolved
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev)
 
 
 def state_operator_metrics(query) -> list[dict]:

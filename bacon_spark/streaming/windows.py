@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.conf import conf_override
+
 
 def with_watermark(df: DataFrame, ts_col: str = "ts", delay: str = "1 hour") -> DataFrame:
     """Watermark wrapper (no-op on batch frames)."""
@@ -136,42 +138,8 @@ _SCRATCH_STREAM_CONFS = {
 }
 
 
-def scratch_checkpoint_conf(spark):
-    """Context manager: pin the scratch-checkpoint conf overrides above
-    for a query about to ``start()``, restoring the session conf after.
-    Durable production checkpoints should keep the defaults: set
-    ``BACON_STREAM_DURABLE_CKPT=1`` (or don't route through this helper)
-    and the session conf is left untouched."""
-    import contextlib
-    import os
-
-    @contextlib.contextmanager
-    def _cm():
-        if os.environ.get("BACON_STREAM_DURABLE_CKPT") == "1":
-            yield
-            return
-        prev = {}
-        for conf, val in _SCRATCH_STREAM_CONFS.items():
-            try:
-                prev[conf] = spark.conf.get(conf)
-            except Exception:
-                prev[conf] = None
-            spark.conf.set(conf, val)
-        try:
-            yield
-        finally:
-            for conf, old in prev.items():
-                if old is None:
-                    spark.conf.unset(conf)
-                else:
-                    spark.conf.set(conf, old)
-
-    return _cm()
-
-
 def run_stream_to_memory(
     stream_df: DataFrame, name: str, mode: str = "complete",
-    checkpoint: str | None = None,
     state_provider: str | None = None,
     expected_state_rows: int | None = None,
     state_partitions: int | None = 8,
@@ -194,7 +162,12 @@ def run_stream_to_memory(
     trigger for fixture-sized state — measured ~30-60% of these
     verification runs' wall time. Results are partitioning-independent;
     a production job sizes this to its state volume instead (the conf is
-    restored after start, and a LARGER session setting is never raised)."""
+    restored after start, and a LARGER session setting is never raised).
+
+    The checkpoint is always a fresh :func:`scratch_dir`, removed after the
+    run, so the scratch-checkpoint confs above always apply."""
+    import shutil
+
     from .state import state_store_conf
 
     w = (
@@ -203,28 +176,23 @@ def run_stream_to_memory(
         .outputMode(mode)
         .trigger(availableNow=True)
     )
-    own_ckpt = checkpoint is None
-    if own_ckpt:
-        checkpoint = scratch_dir(f"ckpt_{name}_")
+    checkpoint = scratch_dir(f"ckpt_{name}_")
     spark = stream_df.sparkSession
     sp_conf = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_conf)
-    if state_partitions is not None and int(prev_sp) > state_partitions:
-        spark.conf.set(sp_conf, str(state_partitions))
+    cap = (
+        {sp_conf: str(state_partitions)}
+        if state_partitions is not None
+        and int(spark.conf.get(sp_conf)) > state_partitions
+        else {}
+    )
     try:
-        with state_store_conf(
-            stream_df.sparkSession, state_provider, expected_state_rows
-        ), scratch_checkpoint_conf(spark):
+        with conf_override(spark, {**cap, **_SCRATCH_STREAM_CONFS}), state_store_conf(
+            spark, state_provider, expected_state_rows
+        ):
             q = w.option("checkpointLocation", checkpoint).start()
-    finally:
-        spark.conf.set(sp_conf, prev_sp)
-    try:
         q.awaitTermination()
     finally:
-        if own_ckpt:
-            import shutil
-
-            shutil.rmtree(checkpoint, ignore_errors=True)
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return q
 
 

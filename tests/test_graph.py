@@ -71,12 +71,20 @@ def test_cc_string_ids(spark):
 
 
 def test_cc_random_vs_union_find(spark):
+    """Labels equal union-find on a random sparse graph, and on a
+    duplicate-heavy multi-component graph (both orientations, every edge
+    repeated) joined to a chain, which needs several rounds to reach the
+    fixpoint the per-round signature detects."""
     rng = random.Random(7)
-    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(250)]
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame([Row(src=a, dst=b) for a, b in edges])
-    want = _union_find(edges)
-    assert _got(connected_components(df)) == want
+    sparse = [(rng.randrange(300), rng.randrange(300)) for _ in range(250)]
+    rng = random.Random(21)
+    dup_heavy = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
+    dup_heavy += [(500 + i, 501 + i) for i in range(12)]  # a chain: >2 rounds
+    dup_heavy = dup_heavy * 2 + [(b, a) for a, b in dup_heavy]
+    for edges in (sparse, dup_heavy):
+        edges = [(a, b) for a, b in edges if a != b]
+        df = spark.createDataFrame([Row(src=a, dst=b) for a, b in edges])
+        assert _got(connected_components(df)) == _union_find(edges)
 
 
 def test_cc_duplicate_multi_edges_and_star_internals(spark):
@@ -106,27 +114,6 @@ def test_cc_duplicate_multi_edges_and_star_internals(spark):
     )
     inner = _large_star(e_dd)
     assert inner.count() <= e_dd.count()
-
-
-def test_cc_observe_signature_matches_agg_signature(spark, monkeypatch):
-    """r14 pin: the per-round convergence signature moved from a separate
-    aggregate job (r13, kept under BACON_CC_SIG=agg) to a CollectMetrics
-    observation on the eager round checkpoint — both forms must converge
-    to identical labels on a duplicate-heavy multi-component graph AND on
-    a chain (multi-round fixpoint), and agree with union-find."""
-    rng = random.Random(21)
-    edges = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
-    edges += [(500 + i, 501 + i) for i in range(12)]  # a chain: >2 rounds
-    edges = [(a, b) for a, b in edges if a != b]
-    dup = edges * 2 + [(b, a) for a, b in edges]
-    df = spark.createDataFrame([Row(src=a, dst=b) for a, b in dup])
-    want = _union_find(edges)
-
-    monkeypatch.setenv("BACON_CC_SIG", "agg")
-    agg_out = _got(connected_components(df))
-    monkeypatch.delenv("BACON_CC_SIG")
-    obs_out = _got(connected_components(df))
-    assert agg_out == obs_out == want
 
 
 def test_triangle_count_known_graphs(spark):

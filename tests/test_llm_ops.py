@@ -8,6 +8,7 @@ from bacon_spark.llm import dedup as dd
 from bacon_spark.llm import multimodal as mm
 from bacon_spark.llm import similarity as sim
 from bacon_spark.llm import text as tx
+from bacon_spark.operators import decisions
 
 
 @pytest.fixture(scope="module")
@@ -854,13 +855,13 @@ def test_containment_routed_picks_index_only_on_exact_params(spark, tmp_path):
     hit = dd.containment_pairs_routed(
         docs, "text", "doc_id", k=16, w=3, df_cap=32, index_path=path
     )
-    assert hit.containment_route == "index"
+    assert decisions.last("containment").route == "index"
     assert sorted(map(tuple, hit.collect())) == want and want
     # parameter mismatch (different k) must NOT probe this index
     miss = dd.containment_pairs_routed(
         docs, "text", "doc_id", k=8, w=3, df_cap=32, index_path=path
     )
-    assert miss.containment_route == "inline"
+    assert decisions.last("containment").route == "inline"
     assert sorted(map(tuple, miss.collect())) == sorted(
         map(
             tuple,
@@ -871,7 +872,7 @@ def test_containment_routed_picks_index_only_on_exact_params(spark, tmp_path):
     none = dd.containment_pairs_routed(
         docs, "text", "doc_id", k=16, w=3, df_cap=32, index_path=str(tmp_path / "no")
     )
-    assert none.containment_route == "inline"
+    assert decisions.last("containment").route == "inline"
     assert sorted(map(tuple, none.collect())) == want
     # ADVICE r10: an index built over a DIFFERENT TEXT COLUMN with
     # matching (id_col, k, w, df_cap) must NOT be probed — text_col is
@@ -879,10 +880,10 @@ def test_containment_routed_picks_index_only_on_exact_params(spark, tmp_path):
     from pyspark.sql import functions as F
 
     aliased = docs.select("doc_id", F.col("text").alias("body"))
-    other_col = dd.containment_pairs_routed(
+    dd.containment_pairs_routed(
         aliased, "body", "doc_id", k=16, w=3, df_cap=32, index_path=path
     )
-    assert other_col.containment_route == "inline"
+    assert decisions.last("containment").route == "inline"
     # ADVICE r10: a FILTERED corpus (row count != the indexed corpus's
     # n_docs) fails the corpus guard and computes inline over the
     # filtered frame — the index would answer for rows the caller
@@ -891,7 +892,7 @@ def test_containment_routed_picks_index_only_on_exact_params(spark, tmp_path):
     filtered = dd.containment_pairs_routed(
         subset, "text", "doc_id", k=16, w=3, df_cap=32, index_path=path
     )
-    assert filtered.containment_route == "inline"
+    assert decisions.last("containment").route == "inline"
     assert sorted(map(tuple, filtered.collect())) == sorted(
         map(
             tuple,
@@ -916,10 +917,10 @@ def test_containment_guard_count_cached_and_trusted_skip(spark, tmp_path):
     dd.containment_index_build(docs, path, "text", "doc_id", k=16, w=3, df_cap=32)
     dd._CORPUS_COUNT_CACHE.clear()
 
-    first = dd.containment_pairs_routed(
+    dd.containment_pairs_routed(
         docs, "text", "doc_id", k=16, w=3, df_cap=32, index_path=path
     )
-    assert first.containment_route == "index"
+    assert decisions.last("containment").route == "index"
     assert 20 in dd._CORPUS_COUNT_CACHE.values()
 
     # second routed call on the same plan: guard answered from the cache,
@@ -928,22 +929,20 @@ def test_containment_guard_count_cached_and_trusted_skip(spark, tmp_path):
         AssertionError("guard re-ran docs.count() despite the session cache")
     )
     try:
-        again = dd.containment_pairs_routed(
+        dd.containment_pairs_routed(
             docs, "text", "doc_id", k=16, w=3, df_cap=32, index_path=path
         )
-        assert again.containment_route == "index"
+        assert decisions.last("containment").route == "index"
 
         # trusted=True: no count even on a cache miss (fresh plan) — the
         # caller owns the corpus correspondence
         dd._CORPUS_COUNT_CACHE.clear()
-        trusted = dd.containment_pairs_routed(
+        dd.containment_pairs_routed(
             docs, "text", "doc_id", k=16, w=3, df_cap=32, index_path=path,
             trusted=True,
         )
-        assert trusted.containment_route == "index"
+        assert decisions.last("containment").route == "index"
         assert not dd._CORPUS_COUNT_CACHE  # nothing was counted
-        from bacon_spark.operators import decisions
-
         assert decisions.last("containment").detail["trusted"] is True
     finally:
         del docs.count  # restore the real bound method
@@ -1022,10 +1021,10 @@ def test_containment_rebuild_preserves_pinned_readers(spark, tmp_path):
     tip = dd.containment_index_probe(spark, path)
     assert tip.count() > len(v1_rows)
     # routed probe still matches params through the dirs-bearing entry
-    routed = dd.containment_pairs_routed(
+    dd.containment_pairs_routed(
         mk(30), "text", "doc_id", k=16, w=3, df_cap=32, index_path=path
     )
-    assert routed.containment_route == "index"
+    assert decisions.last("containment").route == "index"
 
 
 def test_containment_delta_probe_semantics(spark, tmp_path):

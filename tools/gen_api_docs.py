@@ -77,6 +77,7 @@ MODULES = [
     ("bacon_spark.streaming.sink", "Exactly-once manifest sink"),
     ("bacon_spark.streaming.funnel", "Streaming ordered funnel"),
     ("bacon_spark.streaming.state", "State-store provider policy"),
+    ("bacon_spark.utils.conf", "Scoped conf overrides"),
     ("bacon_spark.operators.funnel", "Funnel / cohort retention"),
     ("bacon_spark.functions.udaf", "Pandas UDAFs"),
     ("bacon_spark.functions.udtf", "UDTFs"),

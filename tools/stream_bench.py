@@ -54,6 +54,7 @@ def run_funnel(spark, args):
         streaming_funnel_steps_sharded,
     )
     from bacon_spark.streaming.windows import scratch_dir, stage_ordered_files
+    from bacon_spark.utils.conf import conf_override
 
     steps = ("view", "click", "purchase")
     base = read_table(spark, args.sf_dir, "events").select(
@@ -127,6 +128,7 @@ def run_funnel(spark, args):
     if args.auto:
         # the router's own path: HLL estimate over the staged input picks
         # the form, exactly as gate q189 does
+        from bacon_spark.operators import decisions
         from bacon_spark.streaming.funnel import streaming_funnel_steps_auto
 
         snaps = streaming_funnel_steps_auto(
@@ -134,9 +136,10 @@ def run_funnel(spark, args):
             shards=args.sharded or 256,
             estimate_from=spark.read.parquet(d),
         )
+        route = decisions.last("funnel")
         print(
-            f"auto route: {snaps.funnel_route} "
-            f"(estimated {snaps.funnel_route_users} users)",
+            f"auto route: {route.route} "
+            f"(estimated {route.detail['n_users']} users)",
             file=sys.stderr,
         )
     elif args.sharded:
@@ -148,23 +151,22 @@ def run_funnel(spark, args):
         snaps = streaming_funnel_steps(
             stream, steps, horizon="7 days", watermark="3650 days"
         )
-    sp_conf = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_conf)
-    spark.conf.set(sp_conf, str(args.state_partitions))
     ckpt = scratch_dir("funnel_ckpt_")
     t0 = time.perf_counter()
     try:
-        q = (
-            snaps.writeStream.format("noop")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
+        with conf_override(
+            spark, {"spark.sql.shuffle.partitions": str(args.state_partitions)}
+        ):
+            q = (
+                snaps.writeStream.format("noop")
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            q.awaitTermination()
         wall = time.perf_counter() - t0
     finally:
-        spark.conf.set(sp_conf, prev_sp)
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(d, ignore_errors=True)
 
@@ -191,7 +193,7 @@ def run_funnel(spark, args):
     # event, and never for a user who only produced non-entry events;
     # sharded keying holds one blob per entrant-bearing shard
     routed_sharded = bool(args.sharded) if not args.auto else (
-        snaps.funnel_route == "sharded"
+        route.route == "sharded"
     )
     if routed_sharded:
         assert state_rows == entrant_shards, (state_rows, entrant_shards)
@@ -204,8 +206,8 @@ def run_funnel(spark, args):
             else "ordered_funnel_sharded" if args.sharded
             else "ordered_funnel"
         ),
-        "route": snaps.funnel_route if args.auto else None,
-        "route_users_estimate": snaps.funnel_route_users if args.auto else None,
+        "route": route.route if args.auto else None,
+        "route_users_estimate": route.detail["n_users"] if args.auto else None,
         "shards": n_shards if routed_sharded else None,
         "rows": total,
         "users": users_seen,
