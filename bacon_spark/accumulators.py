@@ -3,11 +3,7 @@
 Re-expression of the reference's accumulator set
 (/root/reference/bacon/accumulators.py) as *composed Catalyst aggregate
 expressions* — never Python UDAFs — so partial aggregation, whole-stage
-codegen, and AQE all apply. Every accumulator here is combinable
-(partial/final), matching the reference's ``add``/``__iadd__`` contract that
-its slice-reuse and totals machinery rely on
-(/root/reference/bacon/cutting.py:391-400,
-/root/reference/bacon/observers/tables.py:285-296).
+codegen, and AQE all apply.
 
 Reference-divergent semantics deliberately preserved (SURVEY §7 hard parts):
 
@@ -22,9 +18,30 @@ Reference-divergent semantics deliberately preserved (SURVEY §7 hard parts):
   properly combinable — strictly better — so totals rows render null to
   honor reference behavior (handled in observers, not here).
 
-For re-aggregation (slice rollup reuse, totals), each accumulator exposes
-``partials`` (map-side columns) and ``merge`` (how to re-aggregate a
-partial), mirroring Spark's own partial-agg contract.
+The partial/final contract. The reference keeps every accumulator in a
+partial form that ``add``/``__iadd__`` grow and merge, and reads the final
+value off it; its slice reuse and totals merge partials
+(/root/reference/bacon/cutting.py:391-400,
+/root/reference/bacon/observers/tables.py:285-296). Here an accumulator
+declares its partial state as ``parts``: one accumulator per component,
+whose ``merge``/``py_merge`` combine that component across groups.
+``partials`` (Spark) and ``py_partials`` (Python) compute the state from
+raw inputs, and ``finish``/``py_finish`` turn it into the finished value,
+so ``agg(c)`` is ``finish(partials(c))``. The engine's slice cache merges
+these states to roll cached results up and to fold refreshed deltas in.
+
+* ``Sum``, ``Count``, ``Min`` and ``Max`` are their own partial
+  (``reaggregatable``): ``parts`` is ``(self,)`` and the finish is the
+  identity, so a finished value merges as it is.
+* ``Average`` keeps ``(sum(x), count(*))`` and ``RatioSum``
+  ``(sum(num), sum(den))``; the division happens in the finish, so their
+  finished values do not merge, but their partials do.
+* Every other accumulator keeps no partial state (``parts`` is None) and
+  its results never merge: ``StdDev`` (the reference's merge yields
+  Inconsistent), ``Group``/``LabeledAcc`` (a guard over distinct values),
+  ``CountDistinct``/``CollectSet``/``Union`` (distinct values are not
+  summable), the percentiles, and the sketches, whose registers merge but
+  whose finished estimates do not (``SketchLattice`` keeps registers).
 """
 
 from __future__ import annotations
@@ -36,11 +53,40 @@ from pyspark.sql import functions as F
 class Accumulator:
     """Base: builds the final aggregate Column for an input expression."""
 
-    #: can the finished value be re-aggregated by simple re-application?
+    #: is the finished value its own partial state (re-aggregated by
+    #: simple re-application)? Registered lattice grains, which hold
+    #: finished values only, merge just these.
     reaggregatable = False
+
+    @property
+    def parts(self) -> tuple | None:
+        """The partial state: the accumulators merging each of its
+        components, or None when there is none. An accumulator that is
+        its own partial returns ``(self,)``; ``Average`` and ``RatioSum``
+        override this with their components."""
+        return (self,) if self.reaggregatable else None
 
     def agg(self, c: Column) -> Column:
         raise NotImplementedError
+
+    def partials(self, c: Column) -> tuple[Column, ...]:
+        """The partial state's aggregate Columns over input *c*, one per
+        ``parts`` component."""
+        return tuple(p.agg(c) for p in self.parts)
+
+    def finish(self, parts: tuple[Column, ...]) -> Column:
+        """The finished value from the partial state's Columns (the
+        identity for an accumulator that is its own partial)."""
+        return parts[0]
+
+    def py_partials(self, values) -> tuple:
+        """Driver-side twin of ``partials`` over raw input *values*."""
+        return tuple(p.py_agg(values) for p in self.parts)
+
+    @staticmethod
+    def py_finish(parts):
+        """Driver-side twin of ``finish``."""
+        return parts[0]
 
     def merge(self, finished: Column) -> Column:
         """Re-aggregate an already-finished column of this accumulator
@@ -53,16 +99,16 @@ class Accumulator:
         reference ``manipulate_sql``, /root/reference/bacon/accumulators.py:48-50)."""
         raise NotImplementedError
 
-    #: driver-side twin of ``merge`` for the warm navigation path
-    #: (engine CuttingBoard._serve_rows): fold a list of FINISHED values
+    #: driver-side twin of ``merge``: fold a list of FINISHED values
     #: (collected from a cached slice) into one re-aggregated value
-    #: without a Spark job. None = no driver-side merge; the engine then
-    #: falls back to the Spark re-aggregation plan. Only meaningful when
-    #: ``reaggregatable`` — this is the reference's in-memory
-    #: ManipulateSlice (/root/reference/bacon/cutting.py:336-522) reborn
-    #: as an O(result-size) Python fold over bounded cached rows. Every
-    #: reaggregatable accumulator defines it: ``CuttingBoard.refresh``
-    #: merges each delta into cached rows with it.
+    #: without a Spark job. Only meaningful when ``reaggregatable``, and
+    #: every reaggregatable accumulator defines it: the engine merges the
+    #: components of a partial state with their ``parts``' ``py_merge``
+    #: when it rolls cached rows up (CuttingBoard._serve_rows) and when
+    #: ``CuttingBoard.refresh`` folds a delta into them. This is the
+    #: reference's in-memory ManipulateSlice
+    #: (/root/reference/bacon/cutting.py:336-522) reborn as an
+    #: O(result-size) Python fold over bounded cached rows.
     py_merge = None
 
     #: driver-side twin of ``agg`` for the COLD small-table path (engine
@@ -182,23 +228,28 @@ class Max(Accumulator):
 
 class Average(Accumulator):
     """sum(x) / count(*) — denominator counts ALL rows including nulls,
-    diverging from SQL AVG (/root/reference/bacon/accumulators.py:157-190)."""
+    diverging from SQL AVG (/root/reference/bacon/accumulators.py:157-190).
+    The partial state is ``(sum(x), count(*))``."""
+
+    parts = (Sum(), Count())
 
     def agg(self, c):
+        return self.finish(self.partials(c))
+
+    def finish(self, parts):
+        s, n = parts
         # divide in double: if the input is an exact decimal expression the
         # numerator is deterministic, and double division is IEEE-exact, so
         # results are bit-identical across engines (oracle-hash safe)
-        return F.sum(c).cast("double") / F.count(F.lit(1))
+        return s.cast("double") / n
 
     @staticmethod
-    def py_agg(values):
-        vals = [v for v in values if v is not None]
-        if not vals:
-            return None  # null sum / n -> null
-        acc = vals[0]
-        for v in vals[1:]:
-            acc = acc + v
-        return float(acc) / len(values)
+    def py_finish(parts):
+        s, n = parts
+        return None if s is None else float(s) / n  # null sum / n -> null
+
+    def py_agg(self, values):
+        return self.py_finish(self.py_partials(values))
 
     def sql(self, expr):
         return f"cast(sum({expr}) as double) / count(*)"
@@ -206,7 +257,10 @@ class Average(Accumulator):
 
 class StdDev(Accumulator):
     """Welford sample stddev (/root/reference/bacon/accumulators.py:193-231).
-    Spark's stddev_samp is numerically equivalent and combinable."""
+    Spark's stddev_samp is numerically equivalent and combinable. It keeps
+    no partial state: the reference's StdDev merge yields Inconsistent
+    (/root/reference/bacon/accumulators.py:227-228), so cached stddevs are
+    recomputed, never merged."""
 
     def agg(self, c):
         return F.stddev_samp(c)
@@ -316,7 +370,10 @@ class LabeledAcc(Accumulator):
 
 class RatioSum(Accumulator):
     """sum(num)/sum(den); null or zero denominator -> null
-    (/root/reference/bacon/accumulators.py:355-393)."""
+    (/root/reference/bacon/accumulators.py:355-393). The partial state is
+    ``(sum(num), sum(den))``."""
+
+    parts = (Sum(), Sum())
 
     def __init__(self, num: str | Column, den: str | Column):
         self.num = num
@@ -327,22 +384,33 @@ class RatioSum(Accumulator):
         return F.expr(e) if isinstance(e, str) else e
 
     def agg(self, c):  # input expression ignored; uses num/den
-        s_num = F.sum(self._col(self.num))
-        s_den = F.sum(self._col(self.den))
-        # double division (see Average.agg for the determinism rationale)
+        return self.finish(self.partials(c))
+
+    def partials(self, c):
+        return (F.sum(self._col(self.num)), F.sum(self._col(self.den)))
+
+    def finish(self, parts):
+        s_num, s_den = parts
+        # double division (see Average.finish for the determinism rationale)
         return F.when(s_den != 0, s_num.cast("double") / s_den.cast("double"))
 
     def py_input_cols(self, measure_col):
         return (self._col(self.num), self._col(self.den))
 
     @staticmethod
-    def py_agg(pairs):
+    def py_partials(pairs):
         """*pairs* are (num, den) tuples (see ``py_input_cols``)."""
-        s_num = Sum.py_agg([p[0] for p in pairs])
-        s_den = Sum.py_agg([p[1] for p in pairs])
+        return (Sum.py_agg([p[0] for p in pairs]), Sum.py_agg([p[1] for p in pairs]))
+
+    @staticmethod
+    def py_finish(parts):
+        s_num, s_den = parts
         if s_den is None or s_den == 0 or s_num is None:
             return None
         return float(s_num) / float(s_den)
+
+    def py_agg(self, pairs):
+        return self.py_finish(self.py_partials(pairs))
 
     def sql(self, expr):
         num = self.num if isinstance(self.num, str) else None

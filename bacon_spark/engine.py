@@ -18,29 +18,43 @@ new query: the query's values and axes are subsets of the parent's, the
 parent's filters are a subset of the query's, and every added filter
 names a parent axis (filtering finished rows by a group-key value is
 filtering the input by that label). Dropping an axis re-aggregates only
-when no ``eq`` filter pins it; re-aggregation needs every value's
-accumulator to be ``reaggregatable`` (the partial/final contract), the
-projection needs nothing.
+when no ``eq`` filter pins it; re-aggregation merges partial states (the
+accumulators' partial/final contract), so it needs every value to have
+one and the store to hold it. The projection needs nothing.
+
+A cached result keeps each value's partial state. ``Sum``, ``Count``,
+``Min`` and ``Max`` are their own partial, so an entry of those holds
+just the finished rows. ``Average`` and ``RatioSum`` keep theirs in
+hidden columns after the values: on the persisted frame, and in the
+entry's ``parts`` beside its rows. No hidden column reaches a caller:
+``Slice.collect`` splits them off once, and an exact hit returns the
+stored finished rows as they are.
 
 The same rule serves three stores:
 
 * entries holding rows — answered driver-side with ZERO Spark jobs
-  (``PY_FILTER_OPS`` twins, the accumulators' ``py_merge``): the
-  reference's in-memory slice walk at its native cost (fuzz-verified
-  against cold recomputes in tests/test_engine.py);
+  (``PY_FILTER_OPS`` twins, the partial components' ``py_merge`` and the
+  accumulators' ``py_finish``): the reference's in-memory slice walk at
+  its native cost (fuzz-verified against cold recomputes in
+  tests/test_engine.py and tests/test_partial_merge.py);
 * entries holding only a frame — answered on the persisted frame
-  (``FILTER_OPS``, ``acc.merge``), never re-scanning the base table;
-* registered lattice grains (operators/lattice.py).
+  (``FILTER_OPS``, ``merge`` and ``finish``), never re-scanning the base
+  table;
+* registered lattice grains (operators/lattice.py). They hold finished
+  values only, so they re-aggregate only ``reaggregatable`` values.
 
 Matches are ranked rows before frames, then projection before
 re-aggregation. A first hit on a small board may instead fold the eager
-snapshot driver-side (``_local_cold``); its result lands in the same LRU.
+snapshot driver-side (``_local_cold``); its result, partial states
+included, lands in the same LRU.
 
 ``refresh`` keeps the LRU current: one Spark job extracts the delta's
-label values and measure inputs (``_extract``), and each entry whose
-values are all reaggregatable merges the delta's partials (``_fold``)
-into its rows in Python. Every kept entry then holds rows, so re-reads
-after a refresh launch no job; the other entries are evicted.
+label values and measure inputs (``_extract``), and each entry holding
+the partial state of every value merges the delta's partial states
+(``_fold``) into its rows in Python. Every kept entry then holds rows, so
+re-reads after a refresh launch no job. Entries with a value that keeps
+no partial state (``StdDev``, ``Group``, ``CountDistinct``, sketches...)
+are evicted.
 
 Scale note (100 TB): cube *results* are small (bounded by group count) even
 when inputs are huge, so persisting results is cheap; the wins come from
@@ -51,12 +65,14 @@ which is precisely the reference's design intent.
 from __future__ import annotations
 
 import functools
+import itertools
 import threading
 from collections import OrderedDict
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from .cubedef import CubeDef
@@ -124,6 +140,41 @@ def _as_rows(schema, out: list[dict]) -> list[Row]:
     return [mk(*(d[c] for c in schema.names)) for d in out]
 
 
+def _flat(hidden: dict) -> list[str]:
+    """The hidden partial-state column names of ``_partial_cols``, in order."""
+    return [c for cols in hidden.values() for c in cols]
+
+
+def _parts_of(hidden: dict, out: list[dict]) -> list | None:
+    """The *hidden* partial-state columns of row dicts *out*, one tuple per
+    row; None when there are none."""
+    cols = _flat(hidden)
+    return [tuple(d[c] for c in cols) for d in out] if cols else None
+
+
+class _Entry(NamedTuple):
+    """One slice-cache entry. *frame* is the persisted result of a
+    Spark-planned slice (None otherwise), with the hidden partial-state
+    columns after the values; *schema*/*rows* are the collected result
+    (None until collected) and *parts* those rows' partial states, one
+    tuple of hidden columns per row. *parts* is None when no value needs
+    one, or when the rows came from finished values only (a lattice
+    grain)."""
+
+    query: CubeQuery
+    frame: DataFrame | None
+    schema: object
+    rows: list | None
+    parts: list | None
+
+    @property
+    def partial(self) -> bool:
+        """Does the entry hold its hidden partial states? A frame always
+        does. For a query without hidden columns the answer does not
+        matter: every value is its own partial or has none."""
+        return self.rows is None or self.parts is not None
+
+
 class _Snapshot(NamedTuple):
     """Label values and measure inputs collected from a frame into Python
     (``CuttingBoard._extract``). *rows* are tuples laid out by
@@ -168,11 +219,9 @@ class CuttingBoard:
         # immune to source churn. Default off: for plain batch boards,
         # recompute-on-invalidation is the CORRECT freshness behavior.
         self.snapshot_cache = snapshot_cache
-        # the slice cache: _memo_key -> (query, frame, schema, rows), LRU
-        # with promote-on-hit like the reference deque rotation
-        # (/root/reference/bacon/cutting.py:181-202). *frame* is the
-        # persisted result of a Spark-planned slice (None otherwise);
-        # *schema*/*rows* the collected result (None until collected).
+        # the slice cache: _memo_key -> _Entry, LRU with promote-on-hit
+        # like the reference deque rotation
+        # (/root/reference/bacon/cutting.py:181-202)
         self._cache: OrderedDict = OrderedDict()
         # bumped by every refresh: a slice planned at an older generation
         # describes pre-refresh data, and the cache drops what it stores
@@ -228,9 +277,9 @@ class CuttingBoard:
     def slice(self, query: CubeQuery) -> Slice:
         gen = self._generation
         hits = self._matches(query) if self.cache_results else []
-        for cq, _frame, schema, rows, added, reagg in hits:
-            if rows is not None:
-                made = self._serve_rows(query, cq, schema, rows, added, reagg, gen)
+        for entry, added, reagg in hits:
+            if entry.rows is not None:
+                made = self._serve_rows(query, entry, added, reagg, gen)
                 if made is not None:
                     return made
         made = self._local_cold(query, gen)
@@ -247,8 +296,20 @@ class CuttingBoard:
             axes=query.axes,
             values=query.values,
         )
+        if not self.cache_results:
+            return Slice(self.cubedef, query, df)
+        # a lattice grain holds finished values only; every other plan of
+        # a caching board carries the hidden partial-state columns, which
+        # the caller's frame leaves out and collect() splits off
+        if served_from == "lattice" or not self._partial_cols(query.values):
+            return Slice(self.cubedef, query, df, board=self, gen=gen)
         return Slice(
-            self.cubedef, query, df, board=self if self.cache_results else None, gen=gen
+            self.cubedef,
+            query,
+            df.select(*query.axes, *query.values),
+            board=self,
+            gen=gen,
+            full=df,
         )
 
     def rows(self, query: CubeQuery, limit: int | None = None, offset: int = 0) -> DataFrame:
@@ -279,20 +340,20 @@ class CuttingBoard:
 
     def clear_cache(self) -> None:
         with self._lock:
-            for _q, frame, _s, _r in self._cache.values():
-                if frame is not None:
-                    frame.unpersist()
+            for entry in self._cache.values():
+                if entry.frame is not None:
+                    entry.frame.unpersist()
             self._cache.clear()
 
     # --- the slice cache ---------------------------------------------------
-    def _store(self, query: CubeQuery, frame=None, schema=None, rows=None, gen=None):
+    def _store(self, query: CubeQuery, frame=None, schema=None, rows=None, parts=None, gen=None):
         """Insert or update *query*'s entry as most recently used and
         return the frame it holds. A frame the entry already holds is
         kept: a concurrent slice of the same query may be collecting it,
         and a collect under unpersist can return no rows. A new frame
         with the same plan shares the held one's Spark cache entry, so
         only a different plan is unpersisted. Missing rows keep the
-        entry's. Evicted frames are unpersisted.
+        entry's rows and *parts*. Evicted frames are unpersisted.
 
         A result planned at generation *gen* older than the board's
         misses a refresh's delta and is not stored; its frame is
@@ -305,40 +366,42 @@ class CuttingBoard:
                 return frame
             old = self._cache.get(key)
             if old is not None:
-                if old[1] is not None:
-                    if frame is not None and not frame.sameSemantics(old[1]):
+                if old.frame is not None:
+                    if frame is not None and not frame.sameSemantics(old.frame):
                         frame.unpersist()
-                    frame = old[1]
+                    frame = old.frame
                 if rows is None:
-                    schema, rows = old[2], old[3]
-            self._cache[key] = (query, frame, schema, rows)
+                    schema, rows, parts = old.schema, old.rows, old.parts
+            self._cache[key] = _Entry(query, frame, schema, rows, parts)
             self._cache.move_to_end(key)
             while len(self._cache) > self.CACHE_SIZE:
-                _, (_q, evicted, _s, _r) = self._cache.popitem(last=False)
-                if evicted is not None:
-                    evicted.unpersist()
+                _, evicted = self._cache.popitem(last=False)
+                if evicted.frame is not None:
+                    evicted.frame.unpersist()
         return frame
 
-    def _memoize_rows(self, query: CubeQuery, schema, rows, gen) -> None:
+    def _memoize_rows(self, query: CubeQuery, schema, rows, gen, parts=None) -> None:
         """Called by Slice.collect(): keep the materialized result of a
-        slice planned at generation *gen* for warm navigation. Bounded
-        per entry (MEMO_MAX_ROWS) and in entry count (CACHE_SIZE, LRU)."""
+        slice planned at generation *gen* for warm navigation, with the
+        rows' partial states *parts*. Bounded per entry (MEMO_MAX_ROWS)
+        and in entry count (CACHE_SIZE, LRU)."""
         if len(rows) <= self.MEMO_MAX_ROWS:
-            self._store(query, schema=schema, rows=list(rows), gen=gen)
+            self._store(query, schema=schema, rows=list(rows), parts=parts, gen=gen)
 
     def _snapshot_frames(self) -> None:
         """Switch to snapshot caching and pin every cached frame as a
         localCheckpoint (see ``snapshot_cache``)."""
         with self._lock:
             self.snapshot_cache = True
-            for key, (cq, frame, schema, rows) in list(self._cache.items()):
-                if frame is not None:
-                    self._cache[key] = (cq, frame.localCheckpoint(eager=True), schema, rows)
-                    frame.unpersist()
+            for key, entry in list(self._cache.items()):
+                if entry.frame is not None:
+                    self._cache[key] = entry._replace(frame=entry.frame.localCheckpoint(eager=True))
+                    entry.frame.unpersist()
 
-    def _derive(self, query: CubeQuery, parent_axes, parent_filters, parent_values):
-        """The one reuse rule: can a finished result at (*parent_axes*,
+    def _derive(self, query: CubeQuery, parent_axes, parent_filters, parent_values, partial):
+        """The one reuse rule: can a result at (*parent_axes*,
         *parent_filters*, *parent_values*) answer *query* exactly?
+        *partial*: the parent holds its hidden partial states.
 
         It can when the query's values and axes are subsets of the
         parent's, the parent's filters are a subset of the query's, and
@@ -346,9 +409,8 @@ class CuttingBoard:
         by a group-key value is filtering the input by that label, for any
         accumulator. Dropping an axis that an ``eq`` filter pins leaves
         one finished row per output group (a projection); dropping any
-        other axis merges several, which needs every value's accumulator
-        to be reaggregatable. Returns ``(added filters, reaggregate)`` or
-        None."""
+        other axis merges several, which needs ``_mergeable``. Returns
+        ``(added filters, reaggregate)`` or None."""
         if not (
             set(query.values) <= set(parent_values)
             and set(query.axes) <= set(parent_axes)
@@ -366,46 +428,74 @@ class CuttingBoard:
             return None
         pinned = {n for n, op, _v in query.filters if op == "eq"}
         reagg = any(a not in query.axes and a not in pinned for a in parent_axes)
-        if reagg and not self._mergeable(query):
+        if reagg and not self._mergeable(query, partial):
             return None
         return added, reagg
 
-    def _mergeable(self, query: CubeQuery) -> bool:
-        """Can finished results of *query* merge (the partial/final
-        contract): is every value's accumulator reaggregatable?"""
-        return all(self.cubedef.get_value(v).acc.reaggregatable for v in query.values)
+    def _mergeable(self, query: CubeQuery, partial: bool) -> bool:
+        """Can results of *query* merge (the partial/final contract): does
+        every value have a partial state that the result holds? A value
+        that is its own partial always does; one with a hidden partial
+        state only when *partial* (a lattice grain, holding finished values
+        only, never does)."""
+        for v in query.values:
+            acc = self.cubedef.get_value(v).acc
+            if not (acc.reaggregatable or (partial and acc.parts is not None)):
+                return False
+        return True
+
+    def _partial_cols(self, values) -> dict:
+        """The hidden partial-state columns of *values*, by value: one per
+        component of each value whose partial state is not its finished
+        value (``Average``, ``RatioSum``). Results carry them after the
+        values."""
+        out = {}
+        for v in values:
+            acc = self.cubedef.get_value(v).acc
+            if not acc.reaggregatable and acc.parts is not None:
+                out[v] = tuple(f"__p_{v}_{k}" for k in range(len(acc.parts)))
+        return out
+
+    def _with_parts(self, cq: CubeQuery, rows, parts) -> list[dict]:
+        """Cached *rows* of *cq* as dicts that also hold their hidden
+        partial-state columns from *parts*."""
+        cols = _flat(self._partial_cols(cq.values))
+        return [{**r.asDict(), **dict(zip(cols, p))} for r, p in zip(rows, parts)]
 
     def _matches(self, query: CubeQuery) -> list:
         """Every cache entry that answers *query* by ``_derive``, as
-        ``(query, frame, schema, rows, added, reaggregate)``, best first:
-        rows before frames, then projection before re-aggregation, most
-        recently used first among equals. An exact hit is promoted, so it
-        leads its rank; one holding rows is the best match there is, and
-        the walk is skipped."""
+        ``(entry, added, reaggregate)``, best first: rows before frames,
+        then projection before re-aggregation, most recently used first
+        among equals. An exact hit is promoted, so it leads its rank; one
+        holding rows is the best match there is, and the walk is
+        skipped."""
         key = _memo_key(query)
         with self._lock:
             exact = self._cache.get(key)
             if exact is not None:
                 self._cache.move_to_end(key)
-                if exact[3] is not None:
-                    return [(*exact, [], False)]
+                if exact.rows is not None:
+                    return [(exact, [], False)]
             entries = list(self._cache.values())
         hits = []
-        for cq, frame, schema, rows in reversed(entries):
-            m = self._derive(query, cq.axes, cq.filters, cq.values)
+        for e in reversed(entries):
+            cq = e.query
+            m = self._derive(query, cq.axes, cq.filters, cq.values, e.partial)
             if m is not None:
-                hits.append((cq, frame, schema, rows, *m))
-        hits.sort(key=lambda h: (h[3] is None, h[5]))
+                hits.append((e, *m))
+        hits.sort(key=lambda h: (h[0].rows is None, h[2]))
         return hits
 
-    def _serve_rows(self, query: CubeQuery, cq: CubeQuery, schema, rows, added, reagg, gen):
-        """Answer *query* from a cached entry's rows driver-side — no
+    def _serve_rows(self, query: CubeQuery, entry: _Entry, added, reagg, gen):
+        """Answer *query* from a cached *entry*'s rows driver-side — no
         Spark job. Returns None when a piece lacks an exact Python twin
-        (an added op without a ``PY_FILTER_OPS`` twin, a value without
-        ``py_merge``); the next match or the Spark plan answers then.
+        (an added op without a ``PY_FILTER_OPS`` twin, a partial
+        component without ``py_merge``); the next match or the Spark plan
+        answers then.
 
         At 100 TB the cached results are still group-count-bounded, so
         this path's cost is unchanged by data scale."""
+        cq, schema, rows = entry.query, entry.schema, entry.rows
         if _memo_key(query) == _memo_key(cq):
             self.local_hits += 1
             decisions.record(
@@ -417,7 +507,9 @@ class CuttingBoard:
             )
             return self._local_made(query, schema, rows)
         if reagg and any(
-            self.cubedef.get_value(v).acc.py_merge is None for v in query.values
+            p.py_merge is None
+            for v in query.values
+            for p in self.cubedef.get_value(v).acc.parts
         ):
             return None
         fields = {f.name: f for f in schema.fields}
@@ -431,11 +523,21 @@ class CuttingBoard:
             ]
         except KeyError:
             return None
+        parts = entry.parts
         if drill:
-            rows = [r for r in rows if all(f(r[a]) for a, f in drill)]
-        out = self._py_reaggregate(query, rows) if reagg else [
-            {c: r[c] for c in (*query.axes, *query.values)} for r in rows
-        ]
+            keep = [all(f(r[a]) for a, f in drill) for r in rows]
+            rows = list(itertools.compress(rows, keep))
+            if parts is not None:
+                parts = list(itertools.compress(parts, keep))
+        hidden = {}
+        if parts is not None:
+            rows = self._with_parts(cq, rows, parts)
+            hidden = self._partial_cols(query.values)
+        if reagg:
+            out = self._py_reaggregate(query, rows, hidden)
+        else:
+            cols = (*query.axes, *query.values, *_flat(hidden))
+            out = [{c: r[c] for c in cols} for r in rows]
         self._py_order(query, out)
         self.local_hits += 1
         decisions.record(
@@ -447,22 +549,23 @@ class CuttingBoard:
             reaggregated=reagg,
             rows=len(out),
         )
-        from pyspark.sql.types import StructType
-
         out_schema = StructType([fields[c] for c in (*query.axes, *query.values)])
         made = self._local_made(query, out_schema, _as_rows(out_schema, out))
         # cache the derived result too: further drills chain off it
-        self._memoize_rows(query, out_schema, made._rows, gen)
+        self._memoize_rows(query, out_schema, made._rows, gen, _parts_of(hidden, out))
         return made
 
-    def _serve_frame(self, df: DataFrame, query: CubeQuery, added, reagg) -> DataFrame:
-        """Answer *query* on a finished frame (a cached slice or a
-        lattice grain) by the ``_derive`` match (*added*, *reagg*)."""
+    def _serve_frame(self, df: DataFrame, query: CubeQuery, added, reagg, partial) -> DataFrame:
+        """Answer *query* on a result frame (a cached slice or a lattice
+        grain) by the ``_derive`` match (*added*, *reagg*). A frame that
+        holds hidden partial-state columns (*partial*) keeps the query's
+        in the answer."""
         for n, op, v in added:
             df = df.filter(FILTER_OPS[op](F.col(n), v))
+        hidden = self._partial_cols(query.values) if partial else {}
         if reagg:
-            return self._reaggregate(df, query)
-        return df.select(*query.axes, *query.values)
+            return self._reaggregate(df, query, hidden)
+        return df.select(*query.axes, *query.values, *_flat(hidden))
 
     def _extract(self, frame: DataFrame, bound: int) -> _Snapshot | None:
         """Extract every label value and (py-foldable) measure input of
@@ -515,12 +618,14 @@ class CuttingBoard:
             ftypes,
         )
 
-    def _fold(self, query: CubeQuery, snap: _Snapshot) -> list[dict] | None:
+    def _fold(self, query: CubeQuery, snap: _Snapshot, hidden: dict) -> list[dict] | None:
         """Aggregate *query* over an extracted snapshot in Python, with
         no Spark job: filter with the PY_FILTER_OPS twins, group by axis
         values, fold each value's extracted inputs with its accumulator's
-        ``py_agg``. Returns unordered row dicts, or None whenever a piece
-        lacks an exact Python twin."""
+        ``py_agg`` — or, for a value with *hidden* partial-state columns
+        (``_partial_cols``), with ``py_partials`` and ``py_finish``,
+        keeping the partial state in those columns. Returns unordered row
+        dicts, or None whenever a piece lacks an exact Python twin."""
         idx = snap.idx
         try:
             fspec = fuse_py_filters(
@@ -532,15 +637,15 @@ class CuttingBoard:
             axi = [idx[a] for a in query.axes]
         except KeyError:
             return None
-        folds = []  # (value name, fold fn, snapshot col indices)
+        folds = []  # (value name, accumulator, snapshot col indices, hidden cols)
         for v in query.values:
-            fn = self.cubedef.get_value(v).acc.py_agg
+            acc = self.cubedef.get_value(v).acc
             # a plain label used as a value (Group accumulator): its input
             # IS the extracted label column
             keys = snap.minputs.get(v, [v] if v in snap.fields else None)
-            if fn is None or keys is None:
+            if acc.py_agg is None or keys is None:
                 return None
-            folds.append((v, fn, [idx[k] for k in keys]))
+            folds.append((v, acc, [idx[k] for k in keys], hidden.get(v)))
         try:
             rows = snap.rows
             for i, f in fspec:
@@ -574,12 +679,18 @@ class CuttingBoard:
             out = []
             for key, grp in items:
                 d = dict(zip(query.axes, key))
-                for v, fn, ii in folds:
+                for v, acc, ii, cols in folds:
                     if len(ii) == 1:
                         i0 = ii[0]
-                        d[v] = fn([g[i0] for g in grp])
+                        vals = [g[i0] for g in grp]
                     else:
-                        d[v] = fn([tuple(g[i] for i in ii) for g in grp])
+                        vals = [tuple(g[i] for i in ii) for g in grp]
+                    if cols is None:
+                        d[v] = acc.py_agg(vals)
+                    else:
+                        st = acc.py_partials(vals)
+                        d[v] = acc.py_finish(st)
+                        d.update(zip(cols, st))
                 out.append(d)
         except TypeError:
             return None  # unhashable label value etc: take the Spark plan
@@ -592,12 +703,11 @@ class CuttingBoard:
         snap = self._snap
         if snap is None:
             return None
-        out = self._fold(query, snap)
+        hidden = self._partial_cols(query.values)
+        out = self._fold(query, snap, hidden)
         if out is None:
             return None
         self._py_order(query, out)
-        from pyspark.sql.types import StructField, StructType
-
         out_schema = StructType(
             [snap.fields[a] for a in query.axes]
             + [
@@ -608,7 +718,7 @@ class CuttingBoard:
             ]
         )
         made = self._local_made(query, out_schema, _as_rows(out_schema, out))
-        self._memoize_rows(query, out_schema, made._rows, gen)
+        self._memoize_rows(query, out_schema, made._rows, gen, _parts_of(hidden, out))
         self.local_hits += 1
         decisions.record(
             "cold_fold",
@@ -633,18 +743,27 @@ class CuttingBoard:
             rows=rows,
         )
 
-    def _py_reaggregate(self, query: CubeQuery, rows) -> list[dict]:
-        """Driver-side twin of ``_reaggregate``: group collected finished
-        rows by query.axes and fold each measure with its accumulator's
-        ``py_merge``."""
+    def _py_reaggregate(self, query: CubeQuery, rows, hidden: dict) -> list[dict]:
+        """Driver-side twin of ``_reaggregate``: group collected rows by
+        query.axes, merge each component of each value's partial state
+        (its finished value, or its *hidden* columns) with that
+        component's ``py_merge``, and finish it with ``py_finish``. The
+        merged partial states stay in the hidden columns."""
         groups: OrderedDict = OrderedDict()
         for r in rows:
             groups.setdefault(tuple(r[a] for a in query.axes), []).append(r)
+        merges = []
+        for v in query.values:
+            acc = self.cubedef.get_value(v).acc
+            merges.append((v, acc, hidden.get(v, (v,)), v in hidden))
         out = []
         for key, grp in groups.items():
             d = dict(zip(query.axes, key))
-            for v in query.values:
-                d[v] = self.cubedef.get_value(v).acc.py_merge([g[v] for g in grp])
+            for v, acc, cols, keep in merges:
+                st = [p.py_merge([g[c] for g in grp]) for p, c in zip(acc.parts, cols)]
+                d[v] = acc.py_finish(st)
+                if keep:
+                    d.update(zip(cols, st))
             out.append(d)
         return out
 
@@ -665,11 +784,15 @@ class CuttingBoard:
 
     def refresh(self, delta_df: DataFrame, grow_base: bool = True) -> None:
         """Incrementally fold *delta_df* (newly-arrived rows, same schema)
-        into the board: the base frame grows, and every cached slice whose
-        values are all reaggregatable merges the delta's partial
-        aggregates into its rows in Python — never re-scanning the full
-        base. Non-mergeable slices (Average/Group/ratio finished values
-        cannot absorb partials) are evicted and recompute lazily, as is a
+        into the board: the base frame grows, and every cached slice that
+        holds the partial state of each of its values merges the delta's
+        partial states into its rows in Python and finishes them — never
+        re-scanning the full base. ``Sum``/``Count``/``Min``/``Max`` are
+        their own partial; ``Average`` and ``RatioSum`` merge the hidden
+        partial states the slice keeps beside its rows. A slice with a
+        value that keeps no partial state (``StdDev``, ``Group``,
+        ``CountDistinct``, sketches...), or whose rows came from a lattice
+        grain's finished values, is evicted and recomputes lazily, as is a
         slice whose result would exceed ``MEMO_MAX_ROWS``.
 
         One Spark job extracts the delta (``_extract``, bounded by
@@ -698,7 +821,7 @@ class CuttingBoard:
         union per micro-batch would grow the plan tree without bound."""
         with self._lock:
             wanted = self._snap is not None or any(
-                self._mergeable(cq) for cq, *_ in self._cache.values()
+                self._mergeable(e.query, e.partial) for e in self._cache.values()
             )
         delta = self._extract(delta_df, self.MEMO_MAX_ROWS) if wanted else None
         with self._lock:
@@ -731,10 +854,10 @@ class CuttingBoard:
                         rows=grown,
                         cap=self._snap_cap,
                     )
-            for key, (cq, frame, schema, rows) in list(self._cache.items()):
-                entry, detail = self._merge_entry(cq, frame, schema, rows, delta, delta_df)
-                if frame is not None:
-                    frame.unpersist()
+            for key, old in list(self._cache.items()):
+                entry, detail = self._merge_entry(old, delta, delta_df)
+                if old.frame is not None:
+                    old.frame.unpersist()
                 if entry is None:
                     del self._cache[key]
                 else:
@@ -743,35 +866,43 @@ class CuttingBoard:
                     "refresh",
                     "evicted" if entry is None else "merged",
                     context=self.decisions_context,
-                    axes=cq.axes,
-                    values=cq.values,
+                    axes=old.query.axes,
+                    values=old.query.values,
                     **detail,
                 )
 
-    def _merge_entry(self, cq: CubeQuery, frame, schema, rows, delta, delta_df):
+    def _merge_entry(self, entry: _Entry, delta, delta_df):
         """One cache entry after ``refresh``, as ``(entry, detail)``: its
-        rows with the delta's partials merged in by the accumulators'
-        ``py_merge``, or None (evicted) when a value is not reaggregatable
-        or the result exceeds ``MEMO_MAX_ROWS``. A frame-only entry's
-        rows are collected first; the delta's partials come from the
-        extracted *delta* snapshot, else from *delta_df* on Spark."""
-        bound = self.MEMO_MAX_ROWS
-        if not self._mergeable(cq):
+        rows with the delta's partial states merged in and finished
+        (``_py_reaggregate``), or None (evicted) when a value keeps no
+        partial state, the entry does not hold it, or the result exceeds
+        ``MEMO_MAX_ROWS``. A frame-only entry's rows are collected first,
+        hidden partial-state columns included; the delta's partial states
+        come from the extracted *delta* snapshot, else from *delta_df* on
+        Spark."""
+        cq, bound = entry.query, self.MEMO_MAX_ROWS
+        if not self._mergeable(cq, entry.partial):
             return None, {"reason": "not_reaggregatable"}
+        hidden = self._partial_cols(cq.values)
+        schema, rows = entry.schema, entry.rows
         if rows is None:
-            schema, rows = frame.schema, frame.limit(bound + 1).collect()
+            rows = entry.frame.limit(bound + 1).collect()
+            # the frame's hidden partial-state columns follow its values
+            schema = StructType(entry.frame.schema.fields[: len(cq.axes) + len(cq.values)])
+        elif entry.parts is not None:
+            rows = self._with_parts(cq, rows, entry.parts)
         if len(rows) > bound:
             return None, {"reason": "over_bound"}
-        part = None if delta is None else self._fold(cq, delta)
+        part = None if delta is None else self._fold(cq, delta, hidden)
         delta_from = "snapshot"
         if part is None:
             part = self._aggregate_frame(cq, delta_df).limit(bound + 1).collect()
             delta_from = "spark"
-        out = self._py_reaggregate(cq, [*rows, *part])
+        out = self._py_reaggregate(cq, [*rows, *part], hidden)
         if len(out) > bound:
             return None, {"reason": "over_bound"}
         self._py_order(cq, out)
-        return (cq, None, schema, _as_rows(schema, out)), {
+        return _Entry(cq, None, schema, _as_rows(schema, out), _parts_of(hidden, out)), {
             "delta_from": delta_from,
             "rows": len(out),
         }
@@ -785,13 +916,14 @@ class CuttingBoard:
         lat_df = self._lattice_plan(query)
         if lat_df is not None:
             return self._order(lat_df, query), "lattice"
-        for cq, frame, _schema, _rows, added, reagg in hits:
-            if frame is not None:
-                key = _memo_key(cq)
+        for entry, added, reagg in hits:
+            if entry.frame is not None:
+                key = _memo_key(entry.query)
                 with self._lock:
                     if key in self._cache:
                         self._cache.move_to_end(key)  # promote on hit
-                return self._order(self._serve_frame(frame, query, added, reagg), query), "frame"
+                served = self._serve_frame(entry.frame, query, added, reagg, True)
+                return self._order(served, query), "frame"
         result = self._aggregate(query)
         if self.cache_results:
             if self.snapshot_cache:
@@ -860,7 +992,7 @@ class CuttingBoard:
                 )
                 return srv(tuple(query.axes), tuple(query.values), fil, FILTER_OPS)
             grain = tuple(a for a in lat.axes if a in wanted)
-            m = self._derive(query, grain, (), lat.values)
+            m = self._derive(query, grain, (), lat.values, False)
             if m is None:
                 miss = "reagg_gate"
                 continue
@@ -874,13 +1006,23 @@ class CuttingBoard:
                 axes=query.axes,
                 values=query.values,
             )
-            return self._serve_frame(lat.slice_df(grain), query, *m)
+            return self._serve_frame(lat.slice_df(grain), query, *m, False)
         return rescan(miss)
 
-    def _reaggregate(self, df: DataFrame, query: CubeQuery) -> DataFrame:
-        aggs = [
-            self.cubedef.get_value(v).acc.merge(F.col(v)).alias(v) for v in query.values
-        ]
+    def _reaggregate(self, df: DataFrame, query: CubeQuery, hidden: dict) -> DataFrame:
+        """Merge each component of each value's partial state (its
+        finished value, or its *hidden* columns) with that component's
+        ``merge`` and finish it; the merged partial states follow the
+        values."""
+        aggs, partials = [], []
+        for v in query.values:
+            acc = self.cubedef.get_value(v).acc
+            cols = hidden.get(v, (v,))
+            merged = [p.merge(F.col(c)) for p, c in zip(acc.parts, cols)]
+            aggs.append(acc.finish(merged).alias(v))
+            if v in hidden:
+                partials += [m.alias(c) for m, c in zip(merged, cols)]
+        aggs += partials
         if not aggs:
             return df.select(*query.axes).distinct()
         if query.axes:
@@ -914,6 +1056,19 @@ class CuttingBoard:
     def _aggregate(self, query: CubeQuery) -> DataFrame:
         return self._aggregate_frame(query, self._frame_for(query))
 
+    def _partial_aggs(self, values) -> list[Column]:
+        """A caching board's aggregates of the hidden partial-state
+        columns of *values*, which its results carry after the values so
+        that the slice cache can merge them. Catalyst computes each once
+        with the finished value's identical aggregate."""
+        if not self.cache_results:
+            return []
+        out = []
+        for v, cols in self._partial_cols(values).items():
+            m = self.cubedef.get_value(v)
+            out += [p.alias(c) for p, c in zip(m.acc.partials(m.column()), cols)]
+        return out
+
     def _aggregate_frame(self, query: CubeQuery, df: DataFrame) -> DataFrame:
         pred = self._predicate(query)
         if pred is not None:
@@ -934,6 +1089,7 @@ class CuttingBoard:
             return self._aggregate_with_sketches(query, df, axis_cols, sketch_vals)
 
         agg_cols = [self.cubedef.get_value(v).agg_column().alias(v) for v in query.values]
+        agg_cols += self._partial_aggs(query.values)
 
         if not agg_cols:
             # axes-only query: distinct combinations
@@ -975,6 +1131,8 @@ class CuttingBoard:
         in_sketch = set(sketch_vals)
         normal_vals = [v for v in query.values if v not in in_sketch]
         agg_cols = [self.cubedef.get_value(v).agg_column().alias(v) for v in normal_vals]
+        hidden = self._partial_cols(normal_vals) if self.cache_results else {}
+        agg_cols += self._partial_aggs(normal_vals)
         if axis_cols:
             out = (
                 df.groupBy(*axis_cols).agg(*agg_cols)
@@ -1025,7 +1183,7 @@ class CuttingBoard:
             else:
                 out = out.crossJoin(est)
         # restore the query's declared value order
-        return out.select(*axes, *query.values)
+        return out.select(*axes, *query.values, *_flat(hidden))
 
     def _order(self, df: DataFrame, query: CubeQuery) -> DataFrame:
         sort_cols: list[Column] = []
@@ -1062,6 +1220,7 @@ class Slice:
         board=None,
         rows=None,
         gen=None,
+        full=None,
     ):
         self.cubedef = cubedef
         self.query = query
@@ -1071,6 +1230,9 @@ class Slice:
         self._board = board  # feeds collected rows back to the warm memo
         self._gen = gen  # the board generation this slice was planned at
         self._rows = rows  # prefetched rows (warm path): collect() is free
+        # *df* plus the hidden partial-state columns after the values:
+        # collected instead of *df*, so the board keeps them
+        self._full = full
 
     @property
     def df(self) -> DataFrame:
@@ -1097,20 +1259,27 @@ class Slice:
         raises QueryError instead of collecting the world — a pivot on a
         high-cardinality axis fails fast and pageable."""
         if self._rows is None:
+            src = self.df if self._full is None else self._full
             if max_rows is not None:
-                got = self.df.limit(max_rows + 1).collect()
+                got = src.limit(max_rows + 1).collect()
                 if len(got) > max_rows:
                     raise QueryError(
                         f"slice has more than {max_rows} rows; refusing to "
                         "collect for rendering — add filters, drop an axis, "
                         "or page through rows()/keyset_page instead"
                     )
-                self._rows = got
             else:
-                self._rows = self.df.collect()
+                got = src.collect()
+            parts = None
+            if self._full is not None:
+                k = len(self.query.axes) + len(self.query.values)
+                mk = Row(*self.df.columns)
+                parts = [r[k:] for r in got]
+                got = [mk(*r[:k]) for r in got]
+            self._rows = got
             if self._board is not None:
                 self._board._memoize_rows(
-                    self.query, self.df.schema, self._rows, self._gen
+                    self.query, self.df.schema, self._rows, self._gen, parts
                 )
         elif max_rows is not None and len(self._rows) > max_rows:
             raise QueryError(
@@ -1161,6 +1330,7 @@ class Slice:
             board=self._board,
             rows=self._rows,
             gen=self._gen,
+            full=self._full,
         )
         child._tree = self._tree
         return child

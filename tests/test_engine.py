@@ -267,17 +267,19 @@ def test_local_serving_matches_spark(cubedef, sells):
 
 
 def test_local_serving_falls_back_for_non_mergeable(cubedef, sells):
-    """Average has no driver-side merge: a rollup of it must recompute
-    (Spark path), never silently mis-merge — and still be correct."""
+    """Group (a label used as a value) keeps no partial state: a rollup
+    of it must recompute (Spark path), never silently mis-merge — and
+    still be correct."""
     b = CuttingBoard(cubedef, sells, cache_results=True)
-    q1 = CubeQuery().add_axis("month").add_axis("item").add_value("avg_number")
+    q1 = CubeQuery().add_axis("month").add_axis("item").add_value("place")
     b.slice(q1).collect()
     q2 = q1.remove_axis("item")
     s = b.slice(q2)
     assert b.local_hits == 0  # not served locally
-    jan = dt.date(2010, 1, 1)
-    got = {r["month"]: r["avg_number"] for r in s.collect()}
-    assert got[jan] == pytest.approx(281 / 3)
+    assert _route(b)[1]["served_from"] == "base"
+    got = {r["month"]: r["place"] for r in s.collect()}
+    # Jan spans italy and england: no single place
+    assert got == {dt.date(2010, 1, 1): None, dt.date(2010, 2, 1): "italy"}
     b.clear_cache()
 
 
